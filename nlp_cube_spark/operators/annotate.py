@@ -1,4 +1,4 @@
-"""Fused Arrow UDF stages: extract -> segment -> tag+parse -> lemmatize.
+"""Fused Arrow UDF stages: extract -> segment -> mwt+tag+parse -> lemmatize.
 
 Stage fusion rationale (SURVEY.md §4): intermediate per-token state
 (pre-tokens, boundary labels, score matrices) never leaves the UDF — the
@@ -26,51 +26,6 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..kernels import arc_scores, lemma_rules, mst, segment_rules
 
-# ---------------------------------------------------------------- schemas
-
-TOKENS_FIELD = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("form", T.StringType()),
-            T.StructField("space_after", T.BooleanType()),
-            T.StructField("is_mwt", T.BooleanType()),
-        ]
-    )
-)
-
-SENTENCES_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("sent_id", T.IntegerType()),
-        T.StructField("tokens", TOKENS_FIELD),
-    ]
-)
-
-WORD_STRUCT = T.StructType(
-    [
-        T.StructField("word_id", T.IntegerType()),
-        T.StructField("mwt_id", T.IntegerType()),
-        T.StructField("tok_form", T.StringType()),
-        T.StructField("form", T.StringType()),
-        T.StructField("upos", T.StringType()),
-        T.StructField("xpos", T.StringType()),
-        T.StructField("feats", T.StringType()),
-        T.StructField("head", T.IntegerType()),
-        T.StructField("deprel", T.StringType()),
-        T.StructField("space_after", T.BooleanType()),
-    ]
-)
-
-PARSED_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("sent_id", T.IntegerType()),
-        T.StructField("words", T.ArrayType(WORD_STRUCT)),
-    ]
-)
-
 _P_RE = re.compile(r"<p>(.*?)</p>", re.DOTALL)
 
 
@@ -91,103 +46,6 @@ def extract_text(pages: DataFrame) -> DataFrame:
         return html.map(one)
 
     return pages.withColumn("extracted_text", _extract(F.col("html")))
-
-
-# ---------------------------------------------------------------- segment
-
-def segment(pages: DataFrame, text_col: str = "text") -> DataFrame:
-    """pages -> one row per sentence with nested token array.
-
-    Fuses reference ops #2-#8 (normalize, pretokenize, space-after, window
-    chunking, boundary classify, greedy decode; tokenizer.py:224-304)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, langs, sids, toks = [], [], [], []
-            for url, lang, text in zip(pdf["url"].tolist(), pdf["lang"].tolist(), pdf[text_col].tolist()):
-                _, sents = segment_rules.segment(text or "", lang)
-                for sid, sent in enumerate(sents):
-                    urls.append(url)
-                    langs.append(lang)
-                    sids.append(sid)
-                    toks.append([{"form": f, "space_after": sp, "is_mwt": mw} for f, sp, mw in sent])
-            if urls:  # empty object columns can't Arrow-convert to list<struct>
-                yield pd.DataFrame({"url": urls, "lang": langs, "sent_id": sids, "tokens": toks})
-
-    cols = [c for c in ("url", "lang", text_col) if c in pages.columns]
-    return pages.select(*cols).mapInPandas(run, schema=SENTENCES_SCHEMA)
-
-
-# ---------------------------------------------------------------- tag+parse
-
-def tag_parse(
-    sentences: DataFrame, scorer: str = "rules", tagger: str = "rules",
-    mwt: str = "dict",
-) -> DataFrame:
-    """sentences -> parsed words (MWT expansion + tagging + biaffine-style
-    scoring + Chu-Liu/Edmonds + label assignment).
-
-    Fuses reference ops #10-#16 (compound.py:183-245, parser.py:404-448,
-    utils.py:400-577) into one Arrow stage; the score matrix lives only
-    inside the kernel. `scorer` picks the arc-score kernel behind the seam
-    ('rules' default, 'learned' = pinned-weight micro-parser); `mwt` picks
-    the compound expander ('dict' lexicon, 'learned' = edit-program
-    classifier able to expand unseen surface forms) — only name strings
-    cross the closure; the plan is identical either way."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.learned import get_mwt_expander, get_scorer, get_tagger
-
-        score_fn = get_scorer(scorer)
-        tag_fn = get_tagger(tagger)
-        mwt_fn = get_mwt_expander(mwt)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out_words = []
-            for tokens, lang in zip(pdf["tokens"], pdf["lang"]):
-                forms, space, mwt_ids, tok_forms = [], [], [], []
-                for tok_idx, tok in enumerate(tokens, start=1):
-                    words = (
-                        mwt_fn(tok["form"], lang) if tok["is_mwt"] else [tok["form"]]
-                    )
-                    for w in words:
-                        forms.append(w)
-                        space.append(bool(tok["space_after"]))
-                        mwt_ids.append(tok_idx if tok["is_mwt"] and len(words) > 1 else 0)
-                        tok_forms.append(tok["form"])
-                tags = tag_fn(forms, lang)
-                upos = [t[0] for t in tags]
-                probs = score_fn(forms, upos)
-                heads = mst.decode_tree(probs).tolist()
-                labels = arc_scores.label_arcs(forms, upos, heads)
-                out_words.append(
-                    [
-                        {
-                            "word_id": i + 1,
-                            "mwt_id": mwt_ids[i],
-                            "tok_form": tok_forms[i],
-                            "form": forms[i],
-                            "upos": upos[i],
-                            "xpos": tags[i][1],
-                            "feats": tags[i][2],
-                            "head": int(heads[i]),
-                            "deprel": labels[i],
-                            "space_after": space[i],
-                        }
-                        for i in range(len(forms))
-                    ]
-                )
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "lang": pdf["lang"],
-                    "sent_id": pdf["sent_id"],
-                    "words": out_words,
-                }
-            )
-
-    return sentences.mapInPandas(run, schema=PARSED_SCHEMA)
 
 
 # ---------------------------------------------------------------- lemmas
@@ -247,12 +105,36 @@ def attach_lemmas(words: DataFrame, lemmatizer: str = "rules") -> DataFrame:
     )
 
 
-def lemmatize(parsed: DataFrame, lemmatizer: str = "rules") -> DataFrame:
-    """parsed (nested) -> flat words DF with lemma column."""
-    words = parsed.select(
-        "url", "lang", "sent_id", F.posexplode("words").alias("pos", "w")
-    ).select("url", "lang", "sent_id", "w.*").drop("pos")
-    return attach_lemmas(words, lemmatizer=lemmatizer)
+# ---------------------------------------------------------------- stages
+
+def _row_stage(
+    df: DataFrame, cols: tuple[str, ...], schema: T.StructType, emit,
+    fields: list[str] | None = None,
+) -> DataFrame:
+    """The one Arrow stage loop of the annotate family (one input row = a
+    page, or a sentence for reannotate).
+
+    `df` is projected to `cols` at the stage boundary (Catalyst cannot
+    prune through a python stage, so nothing else crosses it). Per input
+    row, `emit(out, *row)` appends that row's outputs to `out`: one list
+    per name in `fields` (default: the schema's). Each batch's frame is
+    built from the schema's columns only — the output projection — and
+    empty batches/outputs yield nothing (an empty object column cannot
+    Arrow-convert to list<struct>)."""
+    names = schema.fieldNames()
+    fields = fields or names
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            out = {f: [] for f in fields}
+            for row in zip(*(pdf[c].tolist() for c in cols)):
+                emit(out, *row)
+            if out[names[0]]:
+                yield pd.DataFrame({n: out[n] for n in names})
+
+    return df.select(*cols).mapInPandas(run, schema=schema)
 
 
 FLAT_WORDS_SCHEMA = T.StructType(
@@ -274,40 +156,35 @@ FLAT_WORDS_SCHEMA = T.StructType(
 )
 
 
+def _append_words(out, url, lang, sid, forms, space, mwt_ids, tok_forms, tags, heads, labels):
+    """One annotated sentence -> FLAT_WORDS_SCHEMA column lists."""
+    for i in range(len(forms)):
+        out["url"].append(url)
+        out["lang"].append(lang)
+        out["sent_id"].append(sid)
+        out["word_id"].append(i + 1)
+        out["mwt_id"].append(mwt_ids[i])
+        out["tok_form"].append(tok_forms[i])
+        out["form"].append(forms[i])
+        out["upos"].append(tags[i][0])
+        out["xpos"].append(tags[i][1])
+        out["feats"].append(tags[i][2])
+        out["head"].append(int(heads[i]))
+        out["deprel"].append(labels[i])
+        out["space_after"].append(bool(space[i]))
+
+
 def fused_words(
     pages: DataFrame, text_col: str = "text", scorer: str = "rules",
     tagger: str = "rules", boundary: str = "rules", mwt: str = "dict",
 ) -> DataFrame:
     """pages -> flat words (no lemma) in ONE Arrow stage (cf. fused_triples)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = {f.name: [] for f in FLAT_WORDS_SCHEMA.fields}
-            for url, lang, text in zip(pdf["url"].tolist(), pdf["lang"].tolist(), pdf[text_col].tolist()):
-                for sid, (forms, space, mwt_ids, tok_forms, tags, heads, labels) in enumerate(
-                    _annotate_doc(text, lang, scorer, tagger, boundary, mwt)
-                ):
-                    for i in range(len(forms)):
-                        rows["url"].append(url)
-                        rows["lang"].append(lang)
-                        rows["sent_id"].append(sid)
-                        rows["word_id"].append(i + 1)
-                        rows["mwt_id"].append(mwt_ids[i])
-                        rows["tok_form"].append(tok_forms[i])
-                        rows["form"].append(forms[i])
-                        rows["upos"].append(tags[i][0])
-                        rows["xpos"].append(tags[i][1])
-                        rows["feats"].append(tags[i][2])
-                        rows["head"].append(int(heads[i]))
-                        rows["deprel"].append(labels[i])
-                        rows["space_after"].append(bool(space[i]))
-            if rows["url"]:
-                yield pd.DataFrame(rows)
+    def emit(out, url, lang, text):
+        for sid, sent in enumerate(_annotate_doc(text, lang, scorer, tagger, boundary, mwt)):
+            _append_words(out, url, lang, sid, *sent)
 
-    cols = [c for c in ("url", "lang", text_col) if c in pages.columns]
-    return pages.select(*cols).mapInPandas(run, schema=FLAT_WORDS_SCHEMA)
+    return _row_stage(pages, ("url", "lang", text_col), FLAT_WORDS_SCHEMA, emit)
 
 
 TAGS_FUSED_SCHEMA = T.StructType(
@@ -343,52 +220,26 @@ def fused_tags(
     columns cross the boundary). Same rows either way; a distribution
     query over upos alone ships one short string per word instead of
     eight columns including the per-word url."""
-    fields = (
-        [f for f in TAGS_FUSED_SCHEMA.fields if f.name in columns]
-        if columns is not None
-        else list(TAGS_FUSED_SCHEMA.fields)
+    schema = T.StructType(
+        [f for f in TAGS_FUSED_SCHEMA.fields if columns is None or f.name in columns]
     )
-    schema = T.StructType(fields)
-    names = [f.name for f in fields]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = {n: [] for n in names}
-            for url, lang, text in zip(pdf["url"].tolist(), pdf["lang"].tolist(), pdf[text_col].tolist()):
-                for sid, (forms, _sp, _mw, _tf, tags, _hd, _lb) in enumerate(
-                    _annotate_doc(text, lang, tagger=tagger, boundary=boundary, mwt=mwt, parse=False)
-                ):
-                    if columns is None:
-                        for i in range(len(forms)):
-                            rows["url"].append(url)
-                            rows["lang"].append(lang)
-                            rows["sent_id"].append(sid)
-                            rows["word_id"].append(i + 1)
-                            rows["form"].append(forms[i])
-                            rows["upos"].append(tags[i][0])
-                            rows["xpos"].append(tags[i][1])
-                            rows["feats"].append(tags[i][2])
-                    else:
-                        for i in range(len(forms)):
-                            vals = {
-                                "url": url,
-                                "lang": lang,
-                                "sent_id": sid,
-                                "word_id": i + 1,
-                                "form": forms[i],
-                                "upos": tags[i][0],
-                                "xpos": tags[i][1],
-                                "feats": tags[i][2],
-                            }
-                            for n in names:
-                                rows[n].append(vals[n])
-            if rows[names[0]]:
-                yield pd.DataFrame(rows)
+    def emit(out, url, lang, text):
+        for sid, (forms, _sp, _mw, _tf, tags, _hd, _lb) in enumerate(
+            _annotate_doc(text, lang, tagger=tagger, boundary=boundary, mwt=mwt, parse=False)
+        ):
+            for i in range(len(forms)):
+                out["url"].append(url)
+                out["lang"].append(lang)
+                out["sent_id"].append(sid)
+                out["word_id"].append(i + 1)
+                out["form"].append(forms[i])
+                out["upos"].append(tags[i][0])
+                out["xpos"].append(tags[i][1])
+                out["feats"].append(tags[i][2])
 
-    cols = [c for c in ("url", "lang", text_col) if c in pages.columns]
-    return pages.select(*cols).mapInPandas(run, schema=schema)
+    return _row_stage(pages, ("url", "lang", text_col), schema, emit,
+                      fields=TAGS_FUSED_SCHEMA.fieldNames())
 
 
 def annotate(
@@ -408,18 +259,14 @@ def annotate(
     )
 
 
-def annotate_modular(pages: DataFrame, text_col: str = "text") -> DataFrame:
-    """Stage-by-stage variant (kept for parity tests / composability)."""
-    return lemmatize(tag_parse(segment(pages, text_col=text_col)))
-
-
 def words_to_sentences(words: DataFrame) -> DataFrame:
-    """Pre-tokenized words DF (WORDS_SCHEMA shape) -> SENTENCES_SCHEMA.
+    """Pre-tokenized words DF (WORDS_SCHEMA shape) -> one row per sentence:
+    (url, lang, sent_id, tokens array<struct<form, space_after, is_mwt>>).
 
     Entry point B (reference cube(document), SURVEY §3): the caller brings
     tokenization (e.g. a CoNLL-U file via io/conllu.read_conllu) and only
     tagging/parsing/lemmatization run. MWT groups collapse back to their
-    surface token (tok_form, is_mwt=True) so tag_parse re-expands them."""
+    surface token (tok_form, is_mwt=True) so reannotate re-expands them."""
     # token key: the MWT group id, or the word itself (mwt_id=0 words are
     # one token each — grouping those by tok_form would merge repeats)
     tok_key = F.when(F.col("mwt_id") > 0, F.concat(F.lit("m"), F.col("mwt_id"))).otherwise(
@@ -455,14 +302,30 @@ def reannotate(
     lemmatizer: str = "rules", mwt: str = "dict",
 ) -> DataFrame:
     """Entry point B end-to-end: keep the caller's tokenization, redo
-    tagging + parsing + lemmas. Output = flat annotated words DF."""
-    return lemmatize(
-        tag_parse(words_to_sentences(words), scorer=scorer, tagger=tagger, mwt=mwt),
-        lemmatizer=lemmatizer,
-    )
+    tagging + parsing + lemmas. Output = flat annotated words DF.
+
+    Each sentence runs the same per-sentence function as the fused path
+    (_annotate_sentence: MWT -> tag -> capped parse), so trees match it."""
+
+    def emit(out, url, lang, sid, tokens):
+        sent = [(t["form"], t["space_after"], t["is_mwt"]) for t in tokens]
+        _append_words(out, url, lang, sid,
+                      *_annotate_sentence(sent, lang, *_kernel_fns(scorer, tagger, mwt)))
+
+    flat = _row_stage(words_to_sentences(words), ("url", "lang", "sent_id", "tokens"),
+                      FLAT_WORDS_SCHEMA, emit)
+    return attach_lemmas(flat, lemmatizer=lemmatizer)
 
 
 # ---------------------------------------------------------------- fusion
+
+def _kernel_fns(scorer: str, tagger: str, mwt: str):
+    """(score_fn, tag_fn, mwt_fn) for the named model seams, resolved
+    inside the python worker (only the names cross the closure)."""
+    from ..kernels.learned import get_mwt_expander, get_scorer, get_tagger
+
+    return get_scorer(scorer), get_tagger(tagger), get_mwt_expander(mwt)
+
 
 def _annotate_doc(
     text: str, lang: str, scorer: str = "rules",
@@ -476,30 +339,30 @@ def _annotate_doc(
     the manual column-pruning knob for tag-only consumers: Catalyst cannot
     prune through a python kernel, and the O(n^2) score matrix + CLE
     decode dominate per-document cost on long documents."""
-    from ..kernels.learned import get_mwt_expander, get_scorer, get_tagger
-
-    score_fn = get_scorer(scorer)
-    tag_fn = get_tagger(tagger)
-    mwt_fn = get_mwt_expander(mwt)
+    score_fn, tag_fn, mwt_fn = _kernel_fns(scorer, tagger, mwt)
     _, sents = segment_rules.segment(text or "", lang, boundary=boundary)
-    out = []
-    for sent in sents:
-        forms, space, mwt_ids, tok_forms = [], [], [], []
-        for tok_idx, (form, spa, is_mwt) in enumerate(sent, start=1):
-            words = mwt_fn(form, lang) if is_mwt else [form]
-            for w in words:
-                forms.append(w)
-                space.append(spa)
-                mwt_ids.append(tok_idx if is_mwt and len(words) > 1 else 0)
-                tok_forms.append(form)
-        tags = tag_fn(forms, lang)
-        if parse:
-            upos = [t[0] for t in tags]
-            heads, labels = _parse_capped(forms, upos, score_fn)
-        else:
-            heads, labels = [], []
-        out.append((forms, space, mwt_ids, tok_forms, tags, heads, labels))
-    return out
+    return [_annotate_sentence(sent, lang, score_fn, tag_fn, mwt_fn, parse) for sent in sents]
+
+
+def _annotate_sentence(sent, lang: str, score_fn, tag_fn, mwt_fn, parse: bool = True):
+    """One sentence of (form, space_after, is_mwt) tokens through
+    mwt -> tag [-> capped parse]; the tuple _annotate_doc returns per
+    sentence."""
+    forms, space, mwt_ids, tok_forms = [], [], [], []
+    for tok_idx, (form, spa, is_mwt) in enumerate(sent, start=1):
+        words = mwt_fn(form, lang) if is_mwt else [form]
+        for w in words:
+            forms.append(w)
+            space.append(spa)
+            mwt_ids.append(tok_idx if is_mwt and len(words) > 1 else 0)
+            tok_forms.append(form)
+    tags = tag_fn(forms, lang)
+    if parse:
+        upos = [t[0] for t in tags]
+        heads, labels = _parse_capped(forms, upos, score_fn)
+    else:
+        heads, labels = [], []
+    return forms, space, mwt_ids, tok_forms, tags, heads, labels
 
 
 # Single-sentence parse cap: the arc score matrix is O(n^2) memory and the
@@ -551,11 +414,26 @@ TRIPLES_FUSED_SCHEMA = T.StructType(
 )
 
 
+def _add_triple(out, url, sid, lang, subj, pred, obj, pattern):
+    out["url"].append(url)
+    out["sent_id"].append(sid)
+    out["lang"].append(lang)
+    out["subj"].append(subj)
+    out["pred"].append(pred)
+    out["obj"].append(obj)
+    out["pattern"].append(pattern)
+
+
 def fused_triples(
     pages: DataFrame, text_col: str = "text", scorer: str = "rules",
     tagger: str = "rules", boundary: str = "rules", mwt: str = "dict",
 ) -> DataFrame:
     """pages -> triples in ONE Arrow stage (the production scale path).
+
+    Open-IE patterns over the dependency arcs (SURVEY.md §2c): svo
+    (nsubj + VERB + obj), obl (nsubj + VERB + obl, predicate
+    lemma_case), copula (cop child on a nominal root) and appos —
+    certified triple-for-triple against oracle.extract_triples.
 
     Chaining separate mapInPandas stages costs one python worker per stage
     per task (segment|tagparse|triples = 3x workers -> measured negative
@@ -564,54 +442,36 @@ def fused_triples(
     the Spark analog of the reference running the LM forward inside
     collate_fn (utils_tokenizer.py:560-572)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = {k: [] for k in ("url", "sent_id", "lang", "subj", "pred", "obj", "pattern")}
-
-            def emit(url, sid, lang, s, p, o, pat):
-                out["url"].append(url)
-                out["sent_id"].append(sid)
-                out["lang"].append(lang)
-                out["subj"].append(s)
-                out["pred"].append(p)
-                out["obj"].append(o)
-                out["pattern"].append(pat)
-
-            for url, lang, text in zip(pdf["url"].tolist(), pdf["lang"].tolist(), pdf[text_col].tolist()):
-                for sid, (forms, _sp, _mw, _tf, tags, heads, labels) in enumerate(
-                    _annotate_doc(text, lang, scorer, tagger, boundary, mwt)
+    def emit(out, url, lang, text):
+        for sid, (forms, _sp, _mw, _tf, tags, heads, labels) in enumerate(
+            _annotate_doc(text, lang, scorer, tagger, boundary, mwt)
+        ):
+            kids: dict[int, list[int]] = {}
+            for i, h in enumerate(heads):
+                kids.setdefault(int(h), []).append(i)
+            for i in range(len(forms)):
+                upos = tags[i][0]
+                deps = kids.get(i + 1, [])
+                subs = [d for d in deps if labels[d] == "nsubj"]
+                if upos == "VERB":
+                    v_lemma = lemma_rules.lemmatize(forms[i], "VERB", lang)
+                    objs = [d for d in deps if labels[d] == "obj"]
+                    obls = [d for d in deps if labels[d] == "obl"]
+                    for s in subs:
+                        for o in objs:
+                            _add_triple(out, url, sid, lang, forms[s], v_lemma, forms[o], "svo")
+                        for o in obls:
+                            case = next(
+                                (c for c in kids.get(o + 1, []) if labels[c] == "case"), None
+                            )
+                            pred = f"{v_lemma}_{forms[case].lower()}" if case is not None else v_lemma
+                            _add_triple(out, url, sid, lang, forms[s], pred, forms[o], "obl")
+                if upos in ("NOUN", "PROPN", "PRON", "NUM") and any(
+                    labels[d] == "cop" for d in deps
                 ):
-                    kids: dict[int, list[int]] = {}
-                    for i, h in enumerate(heads):
-                        kids.setdefault(int(h), []).append(i)
-                    upos = [t[0] for t in tags]
-                    for i in range(len(forms)):
-                        deps = kids.get(i + 1, [])
-                        subs = [d for d in deps if labels[d] == "nsubj"]
-                        if upos[i] == "VERB":
-                            v_lemma = lemma_rules.lemmatize(forms[i], "VERB", lang)
-                            objs = [d for d in deps if labels[d] == "obj"]
-                            obls = [d for d in deps if labels[d] == "obl"]
-                            for s in subs:
-                                for o in objs:
-                                    emit(url, sid, lang, forms[s], v_lemma, forms[o], "svo")
-                                for o in obls:
-                                    case = next(
-                                        (c for c in kids.get(o + 1, []) if labels[c] == "case"), None
-                                    )
-                                    pred = f"{v_lemma}_{forms[case].lower()}" if case is not None else v_lemma
-                                    emit(url, sid, lang, forms[s], pred, forms[o], "obl")
-                        if upos[i] in ("NOUN", "PROPN", "PRON", "NUM") and any(
-                            labels[d] == "cop" for d in deps
-                        ):
-                            for s in subs:
-                                emit(url, sid, lang, forms[s], "be", forms[i], "copula")
-                        for a in (d for d in deps if labels[d] == "appos"):
-                            emit(url, sid, lang, forms[i], "appos", forms[a], "appos")
-            if out["url"]:
-                yield pd.DataFrame(out)
+                    for s in subs:
+                        _add_triple(out, url, sid, lang, forms[s], "be", forms[i], "copula")
+                for a in (d for d in deps if labels[d] == "appos"):
+                    _add_triple(out, url, sid, lang, forms[i], "appos", forms[a], "appos")
 
-    cols = [c for c in ("url", "lang", text_col) if c in pages.columns]
-    return pages.select(*cols).mapInPandas(run, schema=TRIPLES_FUSED_SCHEMA)
+    return _row_stage(pages, ("url", "lang", text_col), TRIPLES_FUSED_SCHEMA, emit)

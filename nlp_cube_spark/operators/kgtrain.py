@@ -46,7 +46,9 @@ def corrupt_triples(
     the corrupted pair.  Negatives whose replacement equals the original
     entity, or which reconstruct a TRUE triple (filtered setting), are
     dropped — so a triple can yield fewer than k rows; the drop is the
-    protocol, not a cap."""
+    protocol, not a cap.  k < 1 raises ValueError."""
+    if k < 1:
+        raise ValueError(f"corrupt_triples needs k >= 1, got {k}")
     trips = (
         triples.select(subj_col, pred_col, obj_col)
         .where(
@@ -170,7 +172,9 @@ def transe_train(
     the margin mask, one stack + hash agg for gradients, and the
     embedding table is localCheckpointed per round (5 consumers; the
     CLAUDE.md shared-subtree rule).  Nothing is ever all-pairs and
-    nothing collects to the driver."""
+    nothing collects to the driver.  dim < 1 raises ValueError."""
+    if dim < 1:
+        raise ValueError(f"transe_train needs dim >= 1, got {dim}")
     trips = (
         triples.select(subj_col, pred_col, obj_col)
         .where(

@@ -6,17 +6,14 @@ Reference has no linking stage; semantics per SURVEY.md §2c / north rule:
   shuffle of the fact side);
 - scoring = alias prior (deterministic v0 scorer; a learned scorer would
   slot into the same argmax);
-- selection = argmax per mention. Two physical forms:
-    * `link_mentions` (default): groupBy + max_by over a struct — one
-      partial-aggregatable shuffle, no sort;
-    * `link_mentions_window`: Window.partitionBy(mention).orderBy(...) +
-      row_number()=1 — the §2d window-ranking form, same result.
-  Ties broken by (higher prior, lower entity_id): fully deterministic.
+- selection = argmax per mention (`link_mentions`): groupBy + max_by over
+  a struct — one partial-aggregatable shuffle, no sort. Ties broken by
+  (higher prior, lower entity_id): fully deterministic.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def derived_aliases(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -70,17 +67,6 @@ def link_mentions(mentions: DataFrame, aliases: DataFrame) -> DataFrame:
     return cand.groupBy("mention").agg(
         F.max_by(F.col("entity_id"), rank_key).alias("entity_id"),
         F.max("prior").alias("score"),
-    )
-
-
-def link_mentions_window(mentions: DataFrame, aliases: DataFrame) -> DataFrame:
-    """Same selection expressed as window ranking (SURVEY.md §2d)."""
-    cand = candidates(mentions, aliases)
-    w = Window.partitionBy("mention").orderBy(F.desc("prior"), F.asc("entity_id"))
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("mention", "entity_id", F.col("prior").alias("score"))
     )
 
 

@@ -366,7 +366,9 @@ def audio_fingerprint(assets: DataFrame) -> DataFrame:
                     continue
                 try:
                     _, ch, pcm = mc.decode_wav_samples(b)
-                    if ch < 1 or len(pcm) < ch:
+                    # no whole frame, or a partial one (stereo data chunk
+                    # holding an odd sample count): reshape would raise
+                    if ch < 1 or len(pcm) < ch or len(pcm) % ch:
                         continue
                 except Exception:
                     # sample-undecodable despite a RIFF header (zero

@@ -22,12 +22,11 @@ adds no exchange, the gold variant shuffles once on (url, sent_id).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
 from ..kernels.targets import encode_targets, gold_tokens_from_words
+from .annotate import _annotate_doc, _row_stage
 
 TARGETS_SCHEMA = T.StructType(
     [
@@ -38,8 +37,6 @@ TARGETS_SCHEMA = T.StructType(
         T.StructField("target", T.IntegerType()),
     ]
 )
-
-_COLS = [f.name for f in TARGETS_SCHEMA.fields]
 
 
 def _sentence_targets(
@@ -72,31 +69,21 @@ def _token_spaces(mwt_ids, space_after) -> list[bool]:
 
 def fused_tokenizer_targets(pages: DataFrame, text_col: str = "text") -> DataFrame:
     """pages -> (url, sent_id, pretok_id, pretok, target), one Arrow stage."""
-    from .annotate import _annotate_doc
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = {c: [] for c in _COLS}
-            for url, lang, text in zip(pdf["url"], pdf["lang"], pdf[text_col]):
-                for sid, (_f, space, mwt_ids, tok_forms, _tg, _hd, _lb) in enumerate(
-                    _annotate_doc(text, lang, parse=False)
-                ):
-                    gold = gold_tokens_from_words(tok_forms, mwt_ids)
-                    pretoks, tgts = _sentence_targets(
-                        gold, _token_spaces(mwt_ids, space), lang
-                    )
-                    for pid, (ptok, tgt) in enumerate(zip(pretoks, tgts), start=1):
-                        rows["url"].append(url)
-                        rows["sent_id"].append(sid)
-                        rows["pretok_id"].append(pid)
-                        rows["pretok"].append(ptok)
-                        rows["target"].append(tgt)
-            if rows["url"]:
-                yield pd.DataFrame(rows)
+    def emit(out, url, lang, text):
+        for sid, (_f, space, mwt_ids, tok_forms, _tg, _hd, _lb) in enumerate(
+            _annotate_doc(text, lang, parse=False)
+        ):
+            gold = gold_tokens_from_words(tok_forms, mwt_ids)
+            pretoks, tgts = _sentence_targets(gold, _token_spaces(mwt_ids, space), lang)
+            for pid, (ptok, tgt) in enumerate(zip(pretoks, tgts), start=1):
+                out["url"].append(url)
+                out["sent_id"].append(sid)
+                out["pretok_id"].append(pid)
+                out["pretok"].append(ptok)
+                out["target"].append(tgt)
 
-    return pages.mapInPandas(run, schema=TARGETS_SCHEMA)
+    return _row_stage(pages, ("url", "lang", text_col), TARGETS_SCHEMA, emit)
 
 
 def tokenizer_targets_from_gold(words: DataFrame) -> DataFrame:

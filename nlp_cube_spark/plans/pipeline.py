@@ -35,7 +35,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from ..operators import annotate as A
 from ..operators import canonicalize as C
 from ..operators import linking as LK
-from ..operators import triples as TR
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -218,11 +217,3 @@ def read_canonical_triples(spark: SparkSession, out_dir: str) -> DataFrame:
         .withColumn("obj_canon", F.coalesce("obj_canon", F.lower("obj")))
         .drop("_cs", "_co")
     )
-
-
-def annotate_and_triples(pages: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Convenience: (flat lemmatized words, triples) without writing."""
-    parsed = A.tag_parse(A.segment(pages)).localCheckpoint()  # reused twice
-    words = A.lemmatize(parsed)
-    triples = TR.extract_triples_kernel(parsed)
-    return words, triples

@@ -24,7 +24,7 @@ ARROW_BATCH_BYTES = 8 * 1024 * 1024
 # Pin native math threadpools to one thread BEFORE the JVM (and hence the
 # python worker daemons) start: with K executor threads, unpinned OpenBLAS
 # spawns K x ncores spin-wait threads and local[32] runs SLOWER than
-# local[8] (measured 8x regression in the tag_parse kernel). The kernels
+# local[8] (measured 8x regression in the tag+parse kernels). The kernels
 # are parallel across Arrow batches, never inside numpy (SURVEY.md §4
 # "deterministic kernels").
 for _v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS",

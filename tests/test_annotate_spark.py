@@ -2,11 +2,11 @@
 tree validity, lemma purity, oracle P/R gate (SURVEY.md §5 layers 2-3)."""
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import Window, functions as F
 
 from nlp_cube_spark import oracle
 from nlp_cube_spark.datagen import gen_pages, pages_df
-from nlp_cube_spark.operators import annotate as A, triples as TR
+from nlp_cube_spark.operators import annotate as A
 
 N_DOCS = 50
 SEED = 1234
@@ -18,13 +18,8 @@ def pages(spark):
 
 
 @pytest.fixture(scope="module")
-def parsed(spark, pages):
-    return A.tag_parse(A.segment(pages)).localCheckpoint()
-
-
-@pytest.fixture(scope="module")
-def words(spark, parsed):
-    return A.lemmatize(parsed).localCheckpoint()
+def words(spark, pages):
+    return A.annotate(pages).localCheckpoint()
 
 
 def test_extraction_byte_identical(spark, pages):
@@ -32,25 +27,26 @@ def test_extraction_byte_identical(spark, pages):
     assert ext.where(F.col("extracted_text") != F.col("text")).count() == 0
 
 
-def test_detokenize_invariant(spark, parsed, pages):
+def test_detokenize_invariant(spark, words, pages):
     """concat(form + space?) per doc == whitespace-normalized page text
-    (reference objects.py:109-115 + tokenizer.py:225-229)."""
-    rebuilt = (
-        parsed.select(
-            "url",
-            "sent_id",
-            F.expr(
-                "aggregate(words, '', (acc, w) -> concat(acc,"
-                " case when w.mwt_id > 0 and exists(slice(words, 1,"
-                "   int(array_position(words, w)) - 1), p -> p.mwt_id = w.mwt_id)"
-                " then '' else w.tok_form end,"
-                " case when w.space_after and not (w.mwt_id > 0 and exists(slice(words,"
-                "   int(array_position(words, w)) + 1, size(words)), p -> p.mwt_id = w.mwt_id))"
-                " then ' ' else '' end))"
-            ).alias("stext"),
-        )
-        .groupBy("url")
-        .agg(F.concat_ws("", F.array_sort(F.collect_list(F.struct("sent_id", "stext"))).getField("stext")).alias("rebuilt"))
+    (reference objects.py:109-115 + tokenizer.py:225-229). An MWT group
+    contributes its surface token once, spaced after its last word."""
+    w = Window.partitionBy("url", "sent_id").orderBy("word_id")
+    same_as_prev = (F.col("mwt_id") > 0) & (F.lag("mwt_id").over(w) == F.col("mwt_id"))
+    same_as_next = (F.col("mwt_id") > 0) & (F.lead("mwt_id").over(w) == F.col("mwt_id"))
+    pieces = words.select(
+        "url",
+        "sent_id",
+        "word_id",
+        F.concat(
+            F.when(same_as_prev, "").otherwise(F.col("tok_form")),
+            F.when(F.col("space_after") & ~F.coalesce(same_as_next, F.lit(False)), " ").otherwise(""),
+        ).alias("piece"),
+    )
+    rebuilt = pieces.groupBy("url").agg(
+        F.concat_ws(
+            "", F.array_sort(F.collect_list(F.struct("sent_id", "word_id", "piece"))).getField("piece")
+        ).alias("rebuilt")
     )
     joined = rebuilt.join(pages.select("url", "text"), "url")
     bad = joined.where(
@@ -92,9 +88,9 @@ def test_words_match_oracle_exactly(spark, words):
     assert len(diff) <= 0.02 * len(gold), diff[:5]
 
 
-def test_triples_pr_gate(spark, parsed):
+def test_triples_pr_gate(spark, pages):
     """North-rule gate: triple P/R >= 0.95 vs reference-shaped oracle."""
-    trip = TR.extract_triples_nested(parsed)
+    trip = A.fused_triples(pages)
     sys_t = {(r.url, r.sent_id, r.subj, r.pred, r.obj) for r in trip.collect()}
     _, gold_rows = oracle.run_oracle(gen_pages(N_DOCS, seed=SEED))
     gold = {(g["url"], g["sent_id"], g["subj"], g["pred"], g["obj"]) for g in gold_rows}
@@ -102,41 +98,48 @@ def test_triples_pr_gate(spark, parsed):
     assert p >= 0.95 and r >= 0.95, (p, r)
 
 
-def test_triple_variants_agree(spark, parsed, words):
-    """Kernel (scale path), HOF-nested, and self-join variants all agree."""
-    kernel = TR.extract_triples_kernel(parsed)
-    nested = TR.extract_triples_nested(parsed)
-    joined = TR.extract_triples_join(words)
-    a = {(r.url, r.sent_id, r.subj, r.pred, r.obj, r.pattern) for r in kernel.collect()}
-    b = {(r.url, r.sent_id, r.subj, r.pred, r.obj, r.pattern) for r in nested.collect()}
-    c = {(r.url, r.sent_id, r.subj, r.pred, r.obj, r.pattern) for r in joined.collect()}
-    assert a == b == c
-
-
-def test_annotate_fused_equals_modular(spark, pages):
-    a = {tuple(r) for r in A.annotate(pages).collect()}
-    b = {tuple(r) for r in A.annotate_modular(pages).collect()}
-    assert a == b
-
-
-def test_fused_equals_modular(spark, pages, parsed):
-    """Single-stage fused kernel == modular 3-stage chain (scale path
-    correctness; the fused variant is what build_graph/bench run)."""
-    fused = {
+def test_triple_variants_agree(spark, pages):
+    """The production triple stage (the one build_graph/bench run) equals
+    the independent oracle row for row, pattern and duplicates included."""
+    fused = sorted(
         (r.url, r.sent_id, r.subj, r.pred, r.obj, r.pattern)
         for r in A.fused_triples(pages).collect()
-    }
-    modular = {
+    )
+    _, gold_rows = oracle.run_oracle(gen_pages(N_DOCS, seed=SEED))
+    gold = sorted(
+        (g["url"], g["sent_id"], g["subj"], g["pred"], g["obj"], g["pattern"]) for g in gold_rows
+    )
+    assert fused == gold
+
+
+def test_fused_equals_modular(spark, pages, words):
+    """Single-stage fused kernel == the words table from A.annotate with the
+    reference triple rules (oracle.extract_triples) applied per sentence:
+    the inline rules in fused_triples see the same parse as the words path."""
+    sents: dict = {}
+    for r in words.collect():
+        sents.setdefault((r.url, r.sent_id), []).append(
+            oracle.OWord(
+                r.word_id, r.form, r.lemma, r.upos, r.xpos, r.feats,
+                r.head, r.deprel, r.space_after, r.mwt_id,
+            )
+        )
+    modular = sorted(
+        (url, sid, s, p, o, pat)
+        for (url, sid), sent in sents.items()
+        for s, p, o, pat in oracle.extract_triples(sorted(sent, key=lambda w: w.word_id))
+    )
+    fused = sorted(
         (r.url, r.sent_id, r.subj, r.pred, r.obj, r.pattern)
-        for r in TR.extract_triples_kernel(parsed).collect()
-    }
+        for r in A.fused_triples(pages).collect()
+    )
     assert fused == modular
 
 
 def test_deterministic_across_parallelism(spark, pages):
     """Same triples at 2 vs 8 partitions (scaling-bench prerequisite)."""
-    t1 = TR.extract_triples_nested(A.tag_parse(A.segment(pages.repartition(2))))
-    t2 = TR.extract_triples_nested(A.tag_parse(A.segment(pages.repartition(8))))
+    t1 = A.fused_triples(pages.repartition(2))
+    t2 = A.fused_triples(pages.repartition(8))
     assert {tuple(r) for r in t1.collect()} == {tuple(r) for r in t2.collect()}
 
 

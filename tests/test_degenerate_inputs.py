@@ -5,6 +5,7 @@ import datetime as dt
 import shutil
 import tempfile
 
+import pytest
 from pyspark.sql import types as T
 
 from nlp_cube_spark.datagen import aliases_df
@@ -101,19 +102,28 @@ def test_jaccard_verify_empty_pairs(spark):
     assert D.jaccard_verify_pairs(pairs, docs).count() == 0
 
 
-def test_pathological_long_sentence_parse_capped(spark):
+@pytest.mark.parametrize("path", ["fused_words", "reannotate"])
+def test_pathological_long_sentence_parse_capped(spark, path):
     """One bad web page must not straggle/OOM an executor: sentences above
     MAX_PARSE_LEN parse in independent chunks stitched with 'parataxis' to
     the sentence root — still exactly one root, all heads in range, and
     time/memory linear in length (the uncapped O(n^2) matrix at 32k tokens
-    would be ~8 GB)."""
+    would be ~8 GB). Entry point B (reannotate of the engine's own
+    tokenization, annotations stripped) must apply the same cap; it runs
+    at ~3 caps so an uncapped parse stays small."""
     from nlp_cube_spark.operators import annotate as A
 
-    text = " ".join(["data join table"] * (32000 // 3))
+    n_words = 32000 if path == "fused_words" else 3 * A.MAX_PARSE_LEN
+    text = " ".join(["data join table"] * (n_words // 3))
     pages = spark.createDataFrame([("u1", "en", text)], "url string, lang string, text string")
-    rows = A.fused_words(pages).select("word_id", "head", "deprel").collect()
+    words = A.fused_words(pages)
+    if path == "reannotate":
+        words = A.reannotate(
+            words.select("url", "lang", "sent_id", "word_id", "mwt_id", "tok_form", "space_after")
+        )
+    rows = words.select("word_id", "head", "deprel").collect()
     n = len(rows)
-    assert n == 3 * (32000 // 3)  # one giant sentence, all words present
+    assert n == 3 * (n_words // 3)  # one giant sentence, all words present
     roots = [r for r in rows if r.head == 0]
     assert len(roots) == 1
     assert all(0 <= r.head <= n for r in rows)

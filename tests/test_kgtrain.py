@@ -1,6 +1,8 @@
 """Deterministic KG negative sampling (operators/kgtrain.corrupt_triples,
 Bordes 2013 corruption protocol, filtered setting)."""
 
+import pytest
+
 from nlp_cube_spark.operators.kgtrain import corrupt_triples
 
 TRUTH = [("a", "likes", "b"), ("b", "likes", "c"), ("c", "sees", "a"),
@@ -162,3 +164,17 @@ def test_transe_filtered_eval_matches_bruteforce(spark):
     assert got.hits_at_1 == r6(sum(r <= 1 for r in ranks) / n)
     assert got.hits_at_10 == r6(sum(r <= 10 for r in ranks) / n)
     assert 0 < got.mrr <= 1 and got.hits_at_10 <= 1
+
+
+def test_corrupt_triples_rejects_non_positive_k(spark):
+    for k in (0, -2):
+        with pytest.raises(ValueError):
+            corrupt_triples(_triples(spark), k=k)
+
+
+def test_transe_train_rejects_non_positive_dim(spark):
+    from nlp_cube_spark.operators.kgtrain import transe_train
+
+    for dim in (0, -1):
+        with pytest.raises(ValueError):
+            transe_train(_triples(spark), dim=dim)

@@ -3,14 +3,14 @@
 import pytest
 from pyspark.sql import functions as F
 
-from nlp_cube_spark.datagen import aliases_df, pages_df
-from nlp_cube_spark.operators import annotate as A, canonicalize as C, linking as LK, triples as TR
+from nlp_cube_spark.datagen import aliases_df, gen_aliases, pages_df
+from nlp_cube_spark.operators import annotate as A, canonicalize as C, linking as LK
 
 
 @pytest.fixture(scope="module")
 def triples(spark):
     pages = pages_df(spark, 40, seed=99)
-    return TR.extract_triples_nested(A.tag_parse(A.segment(pages))).localCheckpoint()
+    return A.fused_triples(pages).localCheckpoint()
 
 
 @pytest.fixture(scope="module")
@@ -19,10 +19,21 @@ def aliases(spark):
 
 
 def test_link_variants_agree(spark, triples, aliases):
+    """link_mentions == a plain-Python argmax over the alias rows
+    (higher prior, then lower entity_id)."""
     m = LK.mentions_from_triples(triples)
-    a = {tuple(r) for r in LK.link_mentions(m, aliases).collect()}
-    b = {tuple(r) for r in LK.link_mentions_window(m, aliases).collect()}
-    assert a == b and len(a) > 0
+    got = {tuple(r) for r in LK.link_mentions(m, aliases).collect()}
+    best = {}
+    for row in gen_aliases():
+        cur = best.get(row["alias"])
+        if cur is None or (row["prior"], -row["entity_id"]) > (cur["prior"], -cur["entity_id"]):
+            best[row["alias"]] = row
+    want = {
+        (r.mention, best[r.mention]["entity_id"], best[r.mention]["prior"])
+        for r in m.collect()
+        if r.mention in best
+    }
+    assert got == want and len(got) > 0
 
 
 def test_link_best_prior_wins(spark, aliases):

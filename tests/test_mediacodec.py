@@ -499,3 +499,21 @@ def test_hashers_skip_header_valid_but_undecodable_payloads(spark):
     assets = spark.createDataFrame(rows, "asset_id long, payload binary")
     assert {r.asset_id for r in image_ahash(assets).collect()} == {1}
     assert {r.asset_id for r in audio_fingerprint(assets).collect()} == {3}
+
+
+def test_audio_fingerprint_skips_frame_misaligned_pcm(spark):
+    """A stereo WAV whose data chunk holds 3 samples (1.5 frames) decodes
+    but cannot be split into frames: skipped, never kills the task."""
+    import struct
+    from nlp_cube_spark.kernels import mediacodec as mc
+    from nlp_cube_spark.operators.multimodal import audio_fingerprint
+
+    stereo = mc.make_wav(8000, 2, 50)
+    data = stereo[44 : 44 + 3 * 2]
+    odd = (
+        b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE" + stereo[12:36]
+        + b"data" + struct.pack("<I", len(data)) + data
+    )
+    assert len(mc.decode_wav_samples(odd)[2]) == 3
+    assets = spark.createDataFrame([(1, stereo), (2, odd)], "asset_id long, payload binary")
+    assert {r.asset_id for r in audio_fingerprint(assets).collect()} == {1}

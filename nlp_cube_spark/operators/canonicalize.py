@@ -3,47 +3,130 @@
 Co-referring node clustering over an equivalence-edge DataFrame
 (north rule / SURVEY.md §2c): edges come from (a) apposition triples
 ("Alice, the scientist" => alice ~ scientist-alias-of-alice) and (b)
-mentions linked to the same entity_id. Components are computed with a pure
-DataFrame iterative min-label propagation — no GraphFrames dependency.
+mentions linked to the same entity_id. Components are computed without a
+GraphFrames dependency; deterministic: canonical id = min node id in the
+component.
 
-Scale notes: each round is one shuffle on node id; lineage is cut with
-localCheckpoint() per round (SURVEY.md §4 item 3) so plans don't grow.
-Alias/coref clusters are shallow (diameter <= ~6), so rounds ≈ diameter;
-pointer doubling makes deep chains O(log diameter). Deterministic:
-canonical id = min node id in the component.
+Two physical paths over ONE materialized edge set. The symmetric,
+deduplicated, null-free edge table is localCheckpointed once, and its row
+count rides that checkpoint job as an Observation (no extra job):
+- at or under LOCAL_EDGE_BOUND rows (the usual case: the alias/coref
+  graph is a vocabulary-sized dimension, ~10^2 edges on the fixture,
+  ~10^3 at sf1.0) it is collected and labeled on the driver by a
+  path-halving union-find whose root is always the lexicographic minimum
+  — exactly the converged labeling of the loop below, since Python's
+  code-point order equals Spark's UTF-8 binary string order. A loop over
+  such a dimension spends its time scheduling jobs, not moving data
+  (cf. SparkER, EDBT 2019: after blocking the resolution graph is
+  dimension-sized). The bound guards driver memory; it is not a speed
+  crossover (see LOCAL_EDGE_BOUND);
+- over the bound, a pure DataFrame iterative min-label propagation runs
+  on the same checkpoint, so the (possibly costly) edge input is never
+  recomputed. Each round is one shuffle on node id; lineage is cut with
+  localCheckpoint() per round (SURVEY.md §4 item 3) so plans don't grow.
+  Pointer doubling settles chains and stars in O(log diameter) steps;
+  random graphs can need about O(diameter) (CHANGES.md, FOUND). A loop
+  that reaches max_iter without a zero-change round raises ValueError
+  instead of returning unconverged labels, so both paths return the
+  exact components or an error.
 
-Skew note (tested: test_connected_components_star_skew, 20k-leaf hub): a
-mega-component does NOT concentrate on one reducer — the per-round groupBy
-key is the NODE, so each leaf is its own group and the hub's deg(hub)-row
-group is collapsed map-side by partial min() before the shuffle. The
-residual cost of a mega-component is edge-table size, not key skew; the
-iteration cap (max_iter) bounds pathological diameters.
+Skew note (tested: test_connected_components_star_skew, 20k-leaf hub, on
+both paths): on the distributed path a mega-component does NOT
+concentrate on one reducer — the per-round groupBy key is the NODE, so
+each leaf is its own group and the hub's deg(hub)-row group is collapsed
+map-side by partial min() before the shuffle. The residual cost of a
+mega-component is edge-table size, not key skew.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql.types import StructField, StructType
+
+# Symmetric edge rows (both directions of every distinct non-self edge,
+# plus self-loops) at or under which components are labeled on the
+# driver: ~4*10^5 input edges, whose union-find peaked at ~210 MB of
+# driver Python memory (tracemalloc, CHANGES.md). A driver-memory guard,
+# not a speed crossover: on 4 vCPU the driver path beat the loop at every
+# size measured, up to 1.6*10^6 edges.
+LOCAL_EDGE_BOUND = 800_000
+
+
+def _union_find(pairs) -> list[tuple]:
+    """Exact [(node, component)] for an edge list: path-halving union-find
+    whose every root is the lexicographic minimum of its set."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        a, b = find(a), find(b)
+        if a != b:
+            if a < b:
+                parent[b] = a
+            else:
+                parent[a] = b
+    return [(x, find(x)) for x in parent]
 
 
 def connected_components(edges: DataFrame, max_iter: int = 15) -> DataFrame:
-    """edges (src STRING, dst STRING) -> (node STRING, component STRING).
+    """edges (src, dst) -> (node, component), both of the src/dst type.
 
-    component = lexicographic min node reachable; undirected.
+    component = lexicographic min node reachable; undirected. max_iter
+    bounds the distributed loop's propagation steps (the driver path is
+    exact regardless); ValueError when the loop has not converged."""
+    sym = edges.select("src", "dst").union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    obs = Observation("cc_edges")
+    sym = (
+        sym.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        .dropDuplicates()
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()  # eager: materializes AND fills the observation
+    )
+    try:
+        n = int(obs.get["n"])
+    except Exception:
+        # AQE empty-relation pruning can drop CollectMetrics on an empty
+        # plan (as in _propagate); count the checkpoint, never assume a size
+        n = sym.count()
+    if n > LOCAL_EDGE_BOUND:
+        return _propagate(sym, max_iter)
+    # one direction of each edge suffices (self-loops kept via <=): every
+    # node of sym still occurs as src or dst
+    labels = _union_find(sym.where(F.col("src") <= F.col("dst")).collect())
+    # shipped as Arrow: a local list is pickled through a Python worker
+    # (~0.8 s even for 150 rows); one partition keeps downstream writes
+    # from fanning out into one file per slice
+    cols = list(zip(*labels)) or [(), ()]
+    t = sym.schema["src"].dataType
+    return sym.sparkSession.createDataFrame(
+        pa.table({"node": pa.array(cols[0]), "component": pa.array(cols[1])}),
+        StructType([StructField("node", t), StructField("component", t)]),
+    ).coalesce(1)
+
+
+def _propagate(sym: DataFrame, max_iter: int) -> DataFrame:
+    """Distributed min-label propagation over the checkpointed symmetric
+    edge set.
 
     ONE job per round: the convergence check rides the checkpoint job as
-    an Observation instead of a second count() job (measured: the loop
-    runs on a vocab-sized dimension, so per-round cost is dominated by
-    job scheduling, not data — two tiny jobs per round doubled the
-    canonicalize phase of kg_build_graph)."""
-    sym = edges.select("src", "dst").union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    sym = sym.where(F.col("src").isNotNull() & F.col("dst").isNotNull()).dropDuplicates().localCheckpoint()
+    an Observation instead of a second count() job (two tiny jobs per
+    round doubled the canonicalize phase of kg_build_graph)."""
     nodes = sym.select(F.col("src").alias("node")).dropDuplicates()
     labels = nodes.withColumn("component", F.col("node"))
 
     def _step(lbl: DataFrame) -> DataFrame:
         # hop: min label over neighbors + self, then pointer-doubling:
-        # component <- component(component) — turns O(diameter) min-
-        # propagation into O(log diameter) steps (small-star/large-star)
+        # component <- component(component) — O(log diameter) steps on
+        # chains and stars; random graphs can still need about
+        # O(diameter) (module docstring)
         nbr = (
             sym.join(lbl, sym["src"] == lbl["node"])
             .select(F.col("dst").alias("node"), "component")
@@ -97,8 +180,11 @@ def connected_components(edges: DataFrame, max_iter: int = 15) -> DataFrame:
             )
         labels = new_labels
         if changed == 0:
-            break
-    return labels
+            return labels
+    raise ValueError(
+        f"connected_components: no zero-change round within max_iter={max_iter} "
+        "propagation steps; labels would be unconverged — raise max_iter"
+    )
 
 
 def canonical_entities(linked_triples: DataFrame) -> DataFrame:

@@ -2,7 +2,10 @@
 
 Lifecycle (SURVEY.md §3 "Our Spark lifecycle"):
     pages -> [one fused Arrow stage: segment+tag+parse+extract]
-          -> link (broadcast) -> canonicalize (cc loop) -> bucketed write
+          -> link (broadcast) -> bucketed write
+          -> canonicalize (global entities dimension: components on the
+             driver under canonicalize.LOCAL_EDGE_BOUND, else the
+             distributed loop) -> nodes
 
 Resumability + lineage (north rule):
 - work unit = url-hash bucket (`pmod(xxhash64(url), n_buckets)`), the same
@@ -19,7 +22,9 @@ work (annotate -> triples -> link) is bucket-resumable and stored WITHOUT
 canon columns in `triples`; the mention -> canonical mapping is a
 dimension (`entities`) recomputed every run from the FULL stored triples
 table — its input is the distinct-mention edge set (vocab-sized, Zipf),
-its cost a narrow 5-column scan + the cc loop on the dimension. Canonical
+its cost a narrow 5-column scan + connected components on the dimension
+(one checkpoint and one collect while the edge set is under
+canonicalize.LOCAL_EDGE_BOUND). Canonical
 triples are a read-time broadcast join (`read_canonical_triples`), so a
 resumed run and a one-shot run agree on EVERY column, including canon
 (tested in test_pipeline_resume) — entity components spanning buckets
@@ -105,10 +110,10 @@ def build_graph(
 
     # The post-write tail is three INDEPENDENT job chains (guide §2.6
     # "overlap independent jobs"): the canonicalization chain (read full
-    # triples -> cc loop -> entities -> nodes), the per-bucket lineage
+    # triples -> components -> entities -> nodes), the per-bucket lineage
     # counters, and the manifest. They were sequential only because the
     # driver called them sequentially; the lineage/manifest jobs now
-    # back-fill executors idled by the cc loop's tiny dimension rounds
+    # back-fill executors idled by the canonicalization chain's small jobs
     # (job descriptions are thread-local, so the UI stays labeled).
     from concurrent.futures import ThreadPoolExecutor
 
@@ -133,8 +138,9 @@ def build_graph(
 
         # GLOBAL canonicalization dimension from the full stored table
         # (old + new buckets): a narrow 5-column scan feeding a
-        # vocab-sized cc loop. localCheckpoint cuts lineage before the
-        # iterative loop re-reads it; dropped at the end of the run.
+        # vocab-sized components step. localCheckpoint cuts lineage before
+        # the edge build (and, over the bound, the iterative loop) re-reads
+        # it; dropped at the end of the run.
         full = spark.read.parquet(f"{out_dir}/triples").select(
             "subj", "obj", "pattern", "subj_id", "obj_id"
         ).localCheckpoint()
@@ -171,7 +177,7 @@ def build_graph(
         side.result()  # surface any side-chain failure before declaring done
 
     # every action that reads the barriers (triples/full checkpoints, the
-    # cc loop's per-round labels) has run; drop their blocks so repeated
+    # edge set and any per-round labels) has run; drop their blocks so repeated
     # runs in one session don't accumulate dead cache
     unpersist_rdd_ids(spark, persistent_rdd_ids(spark) - ids0)
 

@@ -68,3 +68,29 @@ def test_build_graph_write_words(spark, pages, aliases):
         assert {"form", "lemma", "upos", "head", "deprel", "bucket"} <= set(words.columns)
     finally:
         shutil.rmtree(out, ignore_errors=True)
+
+
+def _job_ids(spark) -> set[int]:
+    """Ids of every job in the status store — diffed around an action this
+    also counts jobs fired from the action's own threads (build_graph's
+    side-job thread), which a job group would miss."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()  # job-end events are async
+    jobs = sc.statusStore().jobsList(None)
+    return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+
+# Spark jobs of one build_graph over this module's fixture: the build is
+# bound by job scheduling, so a plan change that adds jobs fails here.
+BUILD_GRAPH_JOB_BUDGET = 27
+
+
+def test_build_graph_job_budget(spark, pages, aliases):
+    out = tempfile.mkdtemp(prefix="kg_jobs_")
+    try:
+        before = _job_ids(spark)
+        P.build_graph(spark, pages, aliases, out, n_buckets=4, run_id=1)
+        jobs = len(_job_ids(spark) - before)
+        assert jobs <= BUILD_GRAPH_JOB_BUDGET, f"build_graph ran {jobs} Spark jobs"
+    finally:
+        shutil.rmtree(out, ignore_errors=True)

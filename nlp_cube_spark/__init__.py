@@ -12,9 +12,12 @@ Re-expresses the capabilities of adobe/NLP-Cube (reference at
                               ref parser.py:404-448, utils.py:400-577)
       -> lemmatize           (dedup (form,upos,lang) -> kernel -> broadcast join,
                               ref lemmatizer.py:185-231 + utils.py:109-115)
-      -> triples             (open-IE arc patterns, pure DataFrame logic)
+      -> triples             (open-IE arc patterns, in the same fused Arrow
+                              stage: annotate.sentence_triples)
       -> link                (alias broadcast join + argmax per mention)
-      -> canonicalize        (connected components, small/large-star loop)
+      -> canonicalize        (connected components: driver union-find under
+                              LOCAL_EDGE_BOUND, else a checkpointed
+                              DataFrame min-label loop)
       -> graph tables        (partitioned parquet/Iceberg-style layout)
 
 Everything relational is stock Spark SQL; custom work is confined to the

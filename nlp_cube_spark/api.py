@@ -21,9 +21,10 @@ Ours:
     words_df = cube.process(spark, pages_df)   # batch mode -> words DF
     trips_df = cube.process_triples(spark, pages_df)
 
-Single-document calls run the kernels eagerly in-process (the reference's
-own execution model — cheap for one doc); DataFrame calls route to the
-fused Arrow stages.
+Single-document calls run eagerly in-process (the reference's own
+execution model) on the production per-sentence path, the one the fused
+Arrow stages run per row: `annotate._annotate_doc`, parse cap included,
+and `annotate.sentence_triples`. DataFrame calls route to those stages.
 
 Word attribute names follow the reference exactly: index, word, lemma,
 upos, xpos, attrs, head, label, deps, space_after (README.md:59).
@@ -31,12 +32,10 @@ upos, xpos, attrs, head, label, deps, space_after (README.md:59).
 
 from __future__ import annotations
 
-from .kernels.segment_rules import MWT_LEXICON
-from .oracle import annotate_document, extract_triples
-
 
 class Word:
-    __slots__ = ("index", "word", "lemma", "upos", "xpos", "attrs", "head", "label", "deps", "space_after", "mwt_id")
+    __slots__ = ("index", "word", "lemma", "upos", "xpos", "attrs", "head", "label", "deps", "space_after",
+                 "mwt_id", "tok_form")
 
     def __init__(self, index, word, lemma, upos, xpos, attrs, head, label, space_after, mwt_id=0):
         self.index = index
@@ -50,6 +49,8 @@ class Word:
         self.deps = "_"
         self.space_after = space_after
         self.mwt_id = mwt_id
+        # surface token of an MWT group's words (e.g. "Al" for "a", "el")
+        self.tok_form = None
 
     def _misc(self):
         return "_" if self.space_after else "SpaceAfter=No"
@@ -59,6 +60,11 @@ class Word:
             [str(self.index), self.word, self.lemma, self.upos, self.xpos,
              self.attrs, str(self.head), self.label, self.deps, self._misc()]
         )
+
+
+def _surface(token: list[Word]) -> str:
+    w = token[0]
+    return (w.tok_form or "".join(x.word for x in token)) if w.mwt_id else w.word
 
 
 class Sentence:
@@ -72,40 +78,33 @@ class Sentence:
     def __len__(self):
         return len(self.words)
 
+    def _mwt_groups(self) -> dict[int, list[Word]]:
+        groups: dict[int, list[Word]] = {}
+        for w in self.words:
+            if w.mwt_id:
+                groups.setdefault(w.mwt_id, []).append(w)
+        return groups
+
+    def _tokens(self):
+        """The words grouped by surface token: an MWT group, else one word."""
+        groups = self._mwt_groups()
+        for w in self.words:
+            t = groups.pop(w.mwt_id, None) if w.mwt_id else (w,)
+            if t:
+                yield t
+
     @property
     def text(self):
         # reference _detokenize (objects.py:109-115)
-        out = []
-        emitted = set()
-        for w in self.words:
-            if w.mwt_id and w.mwt_id in emitted:
-                continue
-            if w.mwt_id:
-                emitted.add(w.mwt_id)
-                group = [x for x in self.words if x.mwt_id == w.mwt_id]
-                surface = next(
-                    (s for s, exp in MWT_LEXICON.get(self.lang, {}).items() if exp == [x.word for x in group]),
-                    "".join(x.word for x in group),
-                )
-                out.append(surface + (" " if group[-1].space_after else ""))
-            else:
-                out.append(w.word + (" " if w.space_after else ""))
-        return "".join(out).strip()
+        return "".join(_surface(t) + (" " if t[-1].space_after else "") for t in self._tokens()).strip()
 
     def __repr__(self):
-        lines, emitted = [], set()
+        lines, groups = [], self._mwt_groups()
         for w in self.words:
-            if w.mwt_id and w.mwt_id not in emitted:
-                emitted.add(w.mwt_id)
-                group = [x for x in self.words if x.mwt_id == w.mwt_id]
-                surface = next(
-                    (s for s, exp in MWT_LEXICON.get(self.lang, {}).items() if exp == [x.word for x in group]),
-                    "".join(x.word for x in group),
-                )
-                lines.append(
-                    "\t".join([f"{group[0].index}-{group[-1].index}", surface,
-                               "_", "_", "_", "_", "_", "_", "_", group[-1]._misc()])
-                )
+            t = groups.pop(w.mwt_id, None)
+            if t:
+                lines.append("\t".join([f"{t[0].index}-{t[-1].index}", _surface(t),
+                                        "_", "_", "_", "_", "_", "_", "_", t[-1]._misc()]))
             lines.append(repr(w))
         return "\n".join(lines)
 
@@ -116,6 +115,19 @@ class Document:
 
     def __repr__(self):
         return "\n\n".join(repr(s) for s in self.sentences) + "\n"
+
+
+def _sentence(annotated, lang: str, lem_fn) -> Sentence:
+    """One `_annotate_sentence` tuple -> Sentence, lemmas by `lem_fn`."""
+    forms, space, mwt_ids, tok_forms, tags, heads, labels = annotated
+    words = []
+    for i, form in enumerate(forms):
+        upos, xpos, feats = tags[i]
+        w = Word(i + 1, form, lem_fn(form, upos, lang), upos, xpos, feats,
+                 int(heads[i]), labels[i], bool(space[i]), mwt_ids[i])
+        w.tok_form = tok_forms[i]
+        words.append(w)
+    return Sentence(words, lang)
 
 
 class Cube:
@@ -131,50 +143,37 @@ class Cube:
         return self
 
     def __call__(self, text, flavour: str | None = None) -> Document:
+        from .kernels.learned import get_lemmatizer
+        from .operators import annotate as A
+
         lang = (flavour or self._lang).split("_")[0]
         if isinstance(text, Document):
             # entry point B (reference api.py cube(document)): keep the
-            # provided tokenization, redo tagging/parsing/lemmas
-            return self._reannotate_document(text, lang)
-        sents = []
-        for owords in annotate_document(text, lang):
-            words = [
-                Word(w.word_id, w.form, w.lemma, w.upos, w.xpos, w.feats,
-                     w.head, w.deprel, w.space_after, w.mwt_id)
-                for w in owords
-            ]
-            sents.append(Sentence(words, lang))
-        return Document(sents)
-
-    def _reannotate_document(self, doc: Document, lang: str) -> Document:
-        from .kernels import arc_scores, lemma_rules, mst, tagger_rules
-
-        sents = []
-        for sent in doc.sentences:
-            forms = [w.word for w in sent.words]
-            tags = tagger_rules.tag_sentence(forms, lang)
-            upos = [t[0] for t in tags]
-            heads = mst.decode_tree(arc_scores.score_matrix(forms, upos)).tolist()
-            labels = arc_scores.label_arcs(forms, upos, heads)
-            words = [
-                Word(
-                    w.index, w.word,
-                    lemma_rules.lemmatize(w.word, upos[i], lang),
-                    upos[i], tags[i][1], tags[i][2], int(heads[i]), labels[i],
-                    w.space_after, w.mwt_id,
+            # provided tokenization, redo tagging/parsing/lemmas; an MWT group
+            # re-expands from its surface token (as annotate.words_to_sentences)
+            fns = A._kernel_fns("rules", "rules", "dict")
+            sents = [
+                A._annotate_sentence(
+                    [(_surface(t), t[-1].space_after, bool(t[0].mwt_id)) for t in s._tokens()], lang, *fns
                 )
-                for i, w in enumerate(sent.words)
+                for s in text.sentences
             ]
-            sents.append(Sentence(words, lang))
-        return Document(sents)
+        else:
+            sents = A._annotate_doc(text, lang)
+        lem_fn = get_lemmatizer("rules")
+        return Document([_sentence(s, lang, lem_fn) for s in sents])
 
     # ---- KG extension -------------------------------------------------
     def triples(self, text: str, flavour: str | None = None):
+        from .operators import annotate as A
+
         lang = (flavour or self._lang).split("_")[0]
         out = []
-        for sid, sent in enumerate(annotate_document(text, lang)):
-            for s, p, o, pat in extract_triples(sent):
-                out.append({"sent_id": sid, "subj": s, "pred": p, "obj": o, "pattern": pat})
+        for sid, (forms, _sp, _mw, _tf, tags, heads, labels) in enumerate(A._annotate_doc(text, lang)):
+            A.sentence_triples(
+                forms, tags, heads, labels, lang,
+                lambda s, p, o, pat: out.append({"sent_id": sid, "subj": s, "pred": p, "obj": o, "pattern": pat}),
+            )
         return out
 
     # ---- batch (Spark) mode -------------------------------------------

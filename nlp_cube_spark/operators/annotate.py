@@ -20,6 +20,7 @@ from __future__ import annotations
 import html as html_mod
 import re
 from collections.abc import Iterator
+from functools import partial
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
@@ -414,6 +415,37 @@ TRIPLES_FUSED_SCHEMA = T.StructType(
 )
 
 
+def sentence_triples(forms, tags, heads, labels, lang: str, add) -> None:
+    """Open-IE patterns over one parsed sentence's arcs (SURVEY.md §2c),
+    add(subj, pred, obj, pattern) per triple: svo (nsubj + VERB + obj),
+    obl (nsubj + VERB + obl, predicate lemma_case), copula (cop child on a
+    nominal root) and appos. The rule body of fused_triples and
+    Cube.triples, certified against oracle.extract_triples."""
+    kids: dict[int, list[int]] = {}
+    for i, h in enumerate(heads):
+        kids.setdefault(int(h), []).append(i)
+    for i in range(len(forms)):
+        upos = tags[i][0]
+        deps = kids.get(i + 1, [])
+        subs = [d for d in deps if labels[d] == "nsubj"]
+        if upos == "VERB":
+            v_lemma = lemma_rules.lemmatize(forms[i], "VERB", lang)
+            objs = [d for d in deps if labels[d] == "obj"]
+            obls = [d for d in deps if labels[d] == "obl"]
+            for s in subs:
+                for o in objs:
+                    add(forms[s], v_lemma, forms[o], "svo")
+                for o in obls:
+                    case = next((c for c in kids.get(o + 1, []) if labels[c] == "case"), None)
+                    pred = f"{v_lemma}_{forms[case].lower()}" if case is not None else v_lemma
+                    add(forms[s], pred, forms[o], "obl")
+        if upos in ("NOUN", "PROPN", "PRON", "NUM") and any(labels[d] == "cop" for d in deps):
+            for s in subs:
+                add(forms[s], "be", forms[i], "copula")
+        for a in (d for d in deps if labels[d] == "appos"):
+            add(forms[i], "appos", forms[a], "appos")
+
+
 def _add_triple(out, url, sid, lang, subj, pred, obj, pattern):
     out["url"].append(url)
     out["sent_id"].append(sid)
@@ -430,10 +462,8 @@ def fused_triples(
 ) -> DataFrame:
     """pages -> triples in ONE Arrow stage (the production scale path).
 
-    Open-IE patterns over the dependency arcs (SURVEY.md §2c): svo
-    (nsubj + VERB + obj), obl (nsubj + VERB + obl, predicate
-    lemma_case), copula (cop child on a nominal root) and appos —
-    certified triple-for-triple against oracle.extract_triples.
+    Open-IE rules: sentence_triples, appending straight to the batch's
+    column lists (a partial of _add_triple per sentence).
 
     Chaining separate mapInPandas stages costs one python worker per stage
     per task (segment|tagparse|triples = 3x workers -> measured negative
@@ -446,32 +476,6 @@ def fused_triples(
         for sid, (forms, _sp, _mw, _tf, tags, heads, labels) in enumerate(
             _annotate_doc(text, lang, scorer, tagger, boundary, mwt)
         ):
-            kids: dict[int, list[int]] = {}
-            for i, h in enumerate(heads):
-                kids.setdefault(int(h), []).append(i)
-            for i in range(len(forms)):
-                upos = tags[i][0]
-                deps = kids.get(i + 1, [])
-                subs = [d for d in deps if labels[d] == "nsubj"]
-                if upos == "VERB":
-                    v_lemma = lemma_rules.lemmatize(forms[i], "VERB", lang)
-                    objs = [d for d in deps if labels[d] == "obj"]
-                    obls = [d for d in deps if labels[d] == "obl"]
-                    for s in subs:
-                        for o in objs:
-                            _add_triple(out, url, sid, lang, forms[s], v_lemma, forms[o], "svo")
-                        for o in obls:
-                            case = next(
-                                (c for c in kids.get(o + 1, []) if labels[c] == "case"), None
-                            )
-                            pred = f"{v_lemma}_{forms[case].lower()}" if case is not None else v_lemma
-                            _add_triple(out, url, sid, lang, forms[s], pred, forms[o], "obl")
-                if upos in ("NOUN", "PROPN", "PRON", "NUM") and any(
-                    labels[d] == "cop" for d in deps
-                ):
-                    for s in subs:
-                        _add_triple(out, url, sid, lang, forms[s], "be", forms[i], "copula")
-                for a in (d for d in deps if labels[d] == "appos"):
-                    _add_triple(out, url, sid, lang, forms[i], "appos", forms[a], "appos")
+            sentence_triples(forms, tags, heads, labels, lang, partial(_add_triple, out, url, sid, lang))
 
     return _row_stage(pages, ("url", "lang", text_col), TRIPLES_FUSED_SCHEMA, emit)

@@ -222,15 +222,21 @@ def canonical_entities(linked_triples: DataFrame) -> DataFrame:
     )
 
 
-def canonicalize_triples(linked_triples: DataFrame) -> DataFrame:
-    """Rewrite subj/obj to canonical surfaces; keep originals."""
-    ents = canonical_entities(linked_triples)
-    csub = F.broadcast(ents.select(F.col("mention").alias("_cs"), F.col("canonical").alias("subj_canon")))
-    cobj = F.broadcast(ents.select(F.col("mention").alias("_co"), F.col("canonical").alias("obj_canon")))
+def attach_canon(triples: DataFrame, entities: DataFrame) -> DataFrame:
+    """triples + subj_canon/obj_canon from an entities dimension (mention,
+    canonical): two broadcast joins on lower(subj|obj) — the dimension is
+    vocab-sized — and a mention outside it is its own lower() canon."""
+    csub = F.broadcast(entities.select(F.col("mention").alias("_cs"), F.col("canonical").alias("subj_canon")))
+    cobj = F.broadcast(entities.select(F.col("mention").alias("_co"), F.col("canonical").alias("obj_canon")))
     return (
-        linked_triples.join(csub, F.lower(linked_triples["subj"]) == F.col("_cs"), "left")
-        .join(cobj, F.lower(linked_triples["obj"]) == F.col("_co"), "left")
+        triples.join(csub, F.lower(triples["subj"]) == F.col("_cs"), "left")
+        .join(cobj, F.lower(triples["obj"]) == F.col("_co"), "left")
         .withColumn("subj_canon", F.coalesce("subj_canon", F.lower("subj")))
         .withColumn("obj_canon", F.coalesce("obj_canon", F.lower("obj")))
         .drop("_cs", "_co")
     )
+
+
+def canonicalize_triples(linked_triples: DataFrame) -> DataFrame:
+    """Rewrite subj/obj to canonical surfaces; keep originals."""
+    return attach_canon(linked_triples, canonical_entities(linked_triples))

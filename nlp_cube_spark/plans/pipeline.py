@@ -35,6 +35,7 @@ from __future__ import annotations
 
 import time
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..operators import annotate as A
@@ -157,15 +158,7 @@ def build_graph(
         # read-time view (read_canonical_triples), but computed from the
         # already-checkpointed `full` frame instead of re-scanning the
         # freshly-written parquet a third time
-        ents = spark.read.parquet(f"{out_dir}/entities")
-        csub = F.broadcast(ents.select(F.col("mention").alias("_cs"), F.col("canonical").alias("subj_canon")))
-        cobj = F.broadcast(ents.select(F.col("mention").alias("_co"), F.col("canonical").alias("obj_canon")))
-        canon_triples = (
-            full.join(csub, F.lower(full["subj"]) == F.col("_cs"), "left")
-            .join(cobj, F.lower(full["obj"]) == F.col("_co"), "left")
-            .withColumn("subj_canon", F.coalesce("subj_canon", F.lower("subj")))
-            .withColumn("obj_canon", F.coalesce("obj_canon", F.lower("obj")))
-        )
+        canon_triples = C.attach_canon(full, spark.read.parquet(f"{out_dir}/entities"))
         nodes = (
             canon_triples.select(F.col("subj_canon").alias("node"))
             .unionByName(canon_triples.select(F.col("obj_canon").alias("node")))
@@ -200,10 +193,13 @@ def build_graph(
         "n_triples": int(n_triples),
         "elapsed_sec": round(elapsed, 3),
     }
+    # shipped as Arrow, as in canonicalize.connected_components: a local
+    # list is pickled through a Python worker (~0.3 s more per append)
     spark.createDataFrame(
-        [(run_id, "pipeline", int(n_pages), int(n_triples), float(elapsed))],
+        pa.table({"run_id": [run_id], "stage": ["pipeline"], "rows_in": [n_pages],
+                  "rows_out": [n_triples], "elapsed_sec": [float(elapsed)]}),
         "run_id int, stage string, rows_in long, rows_out long, elapsed_sec double",
-    ).write.mode("append").parquet(f"{out_dir}/_metrics")
+    ).coalesce(1).write.mode("append").parquet(f"{out_dir}/_metrics")
     return metrics
 
 
@@ -212,14 +208,4 @@ def read_canonical_triples(spark: SparkSession, out_dir: str) -> DataFrame:
     entities dimension joined at read time (two broadcast joins — the
     dimension is vocab-sized). Canon columns from this view are identical
     for a one-shot run and any resumed-run sequence over the same input."""
-    triples = spark.read.parquet(f"{out_dir}/triples")
-    ents = spark.read.parquet(f"{out_dir}/entities")
-    csub = F.broadcast(ents.select(F.col("mention").alias("_cs"), F.col("canonical").alias("subj_canon")))
-    cobj = F.broadcast(ents.select(F.col("mention").alias("_co"), F.col("canonical").alias("obj_canon")))
-    return (
-        triples.join(csub, F.lower(triples["subj"]) == F.col("_cs"), "left")
-        .join(cobj, F.lower(triples["obj"]) == F.col("_co"), "left")
-        .withColumn("subj_canon", F.coalesce("subj_canon", F.lower("subj")))
-        .withColumn("obj_canon", F.coalesce("obj_canon", F.lower("obj")))
-        .drop("_cs", "_co")
-    )
+    return C.attach_canon(spark.read.parquet(f"{out_dir}/triples"), spark.read.parquet(f"{out_dir}/entities"))

@@ -1,5 +1,10 @@
 """Reference-API drop-in shim tests (cube/api.py usage from README)."""
 
+import os
+import subprocess
+import sys
+from collections import Counter
+
 from nlp_cube_spark.api import Cube
 from nlp_cube_spark.datagen import pages_df
 
@@ -38,6 +43,11 @@ def test_mwt_in_api():
     assert forms == ["Emma", "viaja", "a", "el", "planeta", "."]
     assert "3-4\tal" in repr(s)
     assert s.text == "Emma viaja al planeta."
+    # a capitalised contraction keeps its own surface (Token.text)
+    s = cube("Al planeta viaja Emma.").sentences[0]
+    assert [w.word for w in s.words][:2] == ["a", "el"]
+    assert "1-2\tAl" in repr(s)
+    assert s.text == "Al planeta viaja Emma."
 
 
 def test_triples_api():
@@ -51,13 +61,24 @@ def test_batch_mode_matches_single(spark):
     pages = pages_df(spark, 5, seed=55)
     cube = Cube()
     df = cube.process_triples(spark, pages)
-    batch = {(r.url, r.sent_id, r.subj, r.pred, r.obj) for r in df.collect()}
-    single = set()
+    batch = Counter((r.url, r.sent_id, r.subj, r.pred, r.obj, r.pattern) for r in df.collect())
+    single = Counter()
     for row in pages.collect():
         cube.load(row.lang)
         for t in cube.triples(row.text):
-            single.add((row.url, t["sent_id"], t["subj"], t["pred"], t["obj"]))
-    assert batch == single
+            single[(row.url, t["sent_id"], t["subj"], t["pred"], t["obj"], t["pattern"])] += 1
+    assert batch and batch == single
+
+
+def test_api_import_is_spark_and_oracle_free():
+    """`import nlp_cube_spark.api` pulls in neither pyspark (imported
+    lazily, on the first call) nor the oracle, which stays the
+    independent reference of tests and benchmarks only."""
+    code = ("import sys, nlp_cube_spark.api; "
+            "print(sorted(m for m in ('pyspark', 'nlp_cube_spark.oracle') if m in sys.modules))")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code], cwd=root, check=True, capture_output=True, text=True)
+    assert out.stdout.strip() == "[]"
 
 
 def test_process_learned_kernels_equal(spark):

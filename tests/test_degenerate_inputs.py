@@ -102,32 +102,43 @@ def test_jaccard_verify_empty_pairs(spark):
     assert D.jaccard_verify_pairs(pairs, docs).count() == 0
 
 
-@pytest.mark.parametrize("path", ["fused_words", "reannotate"])
+@pytest.mark.parametrize("path", ["fused_words", "reannotate", "cube", "cube_document"])
 def test_pathological_long_sentence_parse_capped(spark, path):
     """One bad web page must not straggle/OOM an executor: sentences above
     MAX_PARSE_LEN parse in independent chunks stitched with 'parataxis' to
     the sentence root — still exactly one root, all heads in range, and
     time/memory linear in length (the uncapped O(n^2) matrix at 32k tokens
     would be ~8 GB). Entry point B (reannotate of the engine's own
-    tokenization, annotations stripped) must apply the same cap; it runs
-    at ~3 caps so an uncapped parse stays small."""
+    tokenization, annotations stripped), the eager Cube(text) and
+    Cube(document) must apply the same cap and give fused_words' tree row
+    for row; they run at ~3 caps so an uncapped parse stays small."""
+    from nlp_cube_spark.api import Cube
     from nlp_cube_spark.operators import annotate as A
 
     n_words = 32000 if path == "fused_words" else 3 * A.MAX_PARSE_LEN
     text = " ".join(["data join table"] * (n_words // 3))
     pages = spark.createDataFrame([("u1", "en", text)], "url string, lang string, text string")
     words = A.fused_words(pages)
+    fused = sorted(tuple(r) for r in words.select("word_id", "head", "deprel").collect())
     if path == "reannotate":
         words = A.reannotate(
             words.select("url", "lang", "sent_id", "word_id", "mwt_id", "tok_form", "space_after")
         )
-    rows = words.select("word_id", "head", "deprel").collect()
+        rows = words.select("word_id", "head", "deprel").collect()
+    elif path.startswith("cube"):
+        doc = Cube()(text)
+        if path == "cube_document":
+            doc = Cube()(doc)
+        assert len(doc.sentences) == 1
+        rows = [(w.index, w.head, w.label) for w in doc.sentences[0].words]
+        assert rows == fused
+    else:
+        rows = fused
     n = len(rows)
     assert n == 3 * (n_words // 3)  # one giant sentence, all words present
-    roots = [r for r in rows if r.head == 0]
-    assert len(roots) == 1
-    assert all(0 <= r.head <= n for r in rows)
-    assert sum(1 for r in rows if r.deprel == "parataxis") == (n - 1) // A.MAX_PARSE_LEN
+    assert sum(1 for r in rows if r[1] == 0) == 1
+    assert all(0 <= r[1] <= n for r in rows)
+    assert sum(1 for r in rows if r[2] == "parataxis") == (n - 1) // A.MAX_PARSE_LEN
 
 
 def test_parse_cap_boundary_parity():

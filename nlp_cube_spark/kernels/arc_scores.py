@@ -112,6 +112,22 @@ def intended_arcs(forms: list[str], upos: list[str]) -> tuple[list[int], list[st
     return heads, labels
 
 
+def _floor(n: int) -> np.ndarray:
+    """(n+1, n+1) distance-decayed floor WEAK/(1+|d-h|): no self-arcs, and
+    ROOT's row 0 is zero. Each entry depends only on (d, h), never on n."""
+    idx = np.arange(n + 1)
+    m = WEAK / (1.0 + np.abs(idx[:, None] - idx[None, :]))
+    np.fill_diagonal(m, 0.0)
+    m[0, :] = 0.0
+    return m
+
+
+# One floor for sentences up to FLOOR_WORDS words (129^2 float64, ~130 KB per
+# worker), sliced per sentence; longer sentences build their own.
+FLOOR_WORDS = 128
+_FLOOR = _floor(FLOOR_WORDS)
+
+
 def score_matrix(forms: list[str], upos: list[str]) -> np.ndarray:
     """(n+1, n+1) row-normalized head probabilities from the rule arcs.
 
@@ -121,12 +137,8 @@ def score_matrix(forms: list[str], upos: list[str]) -> np.ndarray:
     """
     n = len(forms)
     heads, _ = intended_arcs(forms, upos)
-    idx = np.arange(n + 1)
-    dist = np.abs(idx[:, None] - idx[None, :])
-    m = WEAK / (1.0 + dist)
-    np.fill_diagonal(m, 0.0)
+    m = _FLOOR[: n + 1, : n + 1].copy() if n <= FLOOR_WORDS else _floor(n)
     m[np.arange(1, n + 1), heads] = STRONG
-    m[0, :] = 0.0
     # row-normalize to probabilities (softmax analog)
     m[1:] = m[1:] / m[1:].sum(axis=1, keepdims=True)
     m[0, 0] = 1.0

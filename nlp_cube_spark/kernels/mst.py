@@ -23,10 +23,13 @@ import numpy as np
 NEG = -1e18
 
 
-def _find_cycle(heads: np.ndarray) -> list[int] | None:
-    """Return one cycle (list of node ids, excluding ROOT) or None."""
+def _find_cycle(heads: list[int]) -> list[int] | None:
+    """Return one cycle (list of node ids, excluding ROOT) or None.
+
+    Runs on a Python list: indexing a numpy array one scalar at a time costs
+    more than the whole walk on sentence-sized inputs."""
     n = len(heads)
-    color = np.zeros(n, dtype=np.int8)  # 0 unvisited, 1 in progress, 2 done
+    color = [0] * n  # 0 unvisited, 1 in progress, 2 done
     for s in range(1, n):
         if color[s]:
             continue
@@ -48,10 +51,8 @@ def _find_cycle(heads: np.ndarray) -> list[int] | None:
 
 
 def _greedy_heads(logs: np.ndarray) -> np.ndarray:
-    n = logs.shape[0]
     masked = logs.copy()
-    np.fill_diagonal(masked, NEG)
-    masked[:, :] = masked  # heads may be any node incl. root
+    np.fill_diagonal(masked, NEG)  # heads may be any other node, ROOT included
     heads = np.argmax(masked, axis=1)
     heads[0] = 0
     return heads
@@ -61,7 +62,7 @@ def _cle(logs: np.ndarray) -> np.ndarray:
     """Chu-Liu/Edmonds on log-scores; returns head per node (heads[0]=0)."""
     n = logs.shape[0]
     heads = _greedy_heads(logs)
-    cyc = _find_cycle(heads)
+    cyc = _find_cycle(heads.tolist())
     if cyc is None:
         return heads
 
@@ -110,9 +111,10 @@ def decode_tree(probs: np.ndarray) -> np.ndarray:
     n1 = probs.shape[0]
     if n1 <= 1:  # zero-word input: nothing to decode
         return np.zeros(0, dtype=np.int64)
-    with np.errstate(divide="ignore"):
-        logs = np.log(np.maximum(probs.astype(np.float64), 0.0))
-    logs[logs == -np.inf] = NEG
+    p = np.asarray(probs, dtype=np.float64)
+    # zero and negative probabilities score NEG; `~(p <= 0)` keeps NaN in
+    # the logged set, so a NaN probability stays NaN
+    logs = np.log(p, out=np.full(p.shape, NEG), where=~(p <= 0))
     np.fill_diagonal(logs, NEG)
     logs[0, :] = NEG  # ROOT has no head
 
@@ -147,7 +149,3 @@ def decode_tree(probs: np.ndarray) -> np.ndarray:
         if best is None or score > best_score:
             best_score, best = score, t
     return best[1:]
-
-
-def decode_batch(probs_batch: list[np.ndarray]) -> list[np.ndarray]:
-    return [decode_tree(p) for p in probs_batch]

@@ -42,6 +42,28 @@ def extract_text(html_bytes: bytes) -> str:
     return html_mod.unescape(m.group(1)) if m else ""
 
 
+# The engine's single-sentence parse cap (annotate.MAX_PARSE_LEN), restated
+# here so the oracle does not import the engine; a test pins them equal.
+MAX_PARSE_LEN = 1024
+
+
+def _parse(forms: list[str], upos: list[str]) -> tuple[list[int], list[str]]:
+    """Parse MAX_PARSE_LEN-word chunks independently, then hang every later
+    chunk's root off the first chunk's root as 'parataxis'."""
+    heads: list[int] = []
+    labels: list[str] = []
+    for lo in range(0, len(forms), MAX_PARSE_LEN):
+        cf, cu = forms[lo : lo + MAX_PARSE_LEN], upos[lo : lo + MAX_PARSE_LEN]
+        ch = mst.decode_tree(arc_scores.score_matrix(cf, cu)).tolist()
+        heads += [h + lo if h else 0 for h in ch]
+        labels += arc_scores.label_arcs(cf, cu, ch)
+    root = heads.index(0) + 1
+    for i in range(root, len(heads)):
+        if heads[i] == 0:
+            heads[i], labels[i] = root, "parataxis"
+    return heads, labels
+
+
 def annotate_document(text: str, lang: str) -> list[list[OWord]]:
     """Full per-document annotation -> sentences of OWords."""
     _, sents = segment_rules.segment(text, lang)
@@ -58,9 +80,7 @@ def annotate_document(text: str, lang: str) -> list[list[OWord]]:
                 mwt_ids.append(tok_idx if is_mwt and len(words) > 1 else 0)
         tags = tagger_rules.tag_sentence(forms, lang)
         upos = [t[0] for t in tags]
-        probs = arc_scores.score_matrix(forms, upos)
-        heads = mst.decode_tree(probs).tolist()
-        labels = arc_scores.label_arcs(forms, upos, heads)
+        heads, labels = _parse(forms, upos)
         words_out = []
         for i, form in enumerate(forms):
             lemma = lemma_rules.lemmatize(form, upos[i], lang)

@@ -102,7 +102,7 @@ def test_jaccard_verify_empty_pairs(spark):
     assert D.jaccard_verify_pairs(pairs, docs).count() == 0
 
 
-@pytest.mark.parametrize("path", ["fused_words", "reannotate", "cube", "cube_document"])
+@pytest.mark.parametrize("path", ["fused_words", "reannotate", "cube", "cube_document", "oracle"])
 def test_pathological_long_sentence_parse_capped(spark, path):
     """One bad web page must not straggle/OOM an executor: sentences above
     MAX_PARSE_LEN parse in independent chunks stitched with 'parataxis' to
@@ -111,7 +111,9 @@ def test_pathological_long_sentence_parse_capped(spark, path):
     would be ~8 GB). Entry point B (reannotate of the engine's own
     tokenization, annotations stripped), the eager Cube(text) and
     Cube(document) must apply the same cap and give fused_words' tree row
-    for row; they run at ~3 caps so an uncapped parse stays small."""
+    for row, and so must the oracle's independent chunk rule; they run at
+    ~3 caps so an uncapped parse stays small."""
+    from nlp_cube_spark import oracle
     from nlp_cube_spark.api import Cube
     from nlp_cube_spark.operators import annotate as A
 
@@ -132,6 +134,10 @@ def test_pathological_long_sentence_parse_capped(spark, path):
         assert len(doc.sentences) == 1
         rows = [(w.index, w.head, w.label) for w in doc.sentences[0].words]
         assert rows == fused
+    elif path == "oracle":
+        (sent,) = oracle.annotate_document(text, "en")
+        rows = [(w.word_id, w.head, w.deprel) for w in sent]
+        assert rows == fused
     else:
         rows = fused
     n = len(rows)
@@ -139,6 +145,13 @@ def test_pathological_long_sentence_parse_capped(spark, path):
     assert sum(1 for r in rows if r[1] == 0) == 1
     assert all(0 <= r[1] <= n for r in rows)
     assert sum(1 for r in rows if r[2] == "parataxis") == (n - 1) // A.MAX_PARSE_LEN
+
+
+def test_oracle_parse_cap_equals_engine_cap():
+    from nlp_cube_spark import oracle
+    from nlp_cube_spark.operators import annotate as A
+
+    assert oracle.MAX_PARSE_LEN == A.MAX_PARSE_LEN
 
 
 def test_parse_cap_boundary_parity():

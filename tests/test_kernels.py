@@ -4,6 +4,10 @@ Mirrors the reference's component semantics (SURVEY.md §5 layer 1); the
 canonical micro-example is "This is a test." (reference README.md:24-31).
 """
 
+import ast
+import itertools
+import pathlib
+
 import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
@@ -196,6 +200,56 @@ def test_mst_always_valid_tree(n, seed):
     _tree_ok(list(heads), n)
 
 
+def _arborescences(n):
+    """Every head vector (heads[0] = 0) whose arcs form a tree rooted at 0."""
+    for tail in itertools.product(range(n + 1), repeat=n):
+        heads = (0,) + tail
+        if any(heads[d] == d for d in range(1, n + 1)):
+            continue
+        ok = True
+        for d in range(1, n + 1):
+            v, steps = d, 0
+            while v != 0 and steps <= n:
+                v, steps = heads[v], steps + 1
+            ok = ok and v == 0
+        if ok:
+            yield heads
+
+
+@given(
+    st.integers(min_value=1, max_value=5).flatmap(
+        lambda n: st.lists(
+            st.lists(st.sampled_from([0.0, 0.0, 0.25, 0.5, 0.5, 1.0, 0.3, 0.7]), min_size=n + 1, max_size=n + 1),
+            min_size=n + 1,
+            max_size=n + 1,
+        )
+    )
+)
+@settings(max_examples=150, deadline=None)
+def test_cle_is_optimal_against_enumeration(rows):
+    """Independent certificate of the decode: Chu-Liu/Edmonds reaches the
+    maximum total log-score over ALL arborescences rooted at 0, found by
+    exhaustive enumeration. Scores, not heads, are compared, since ties
+    (repeated probabilities) admit several optimal trees."""
+    p = np.array(rows)
+    n = p.shape[0] - 1
+    logs = np.full(p.shape, mst.NEG)
+    logs[p > 0] = np.log(p[p > 0])
+    np.fill_diagonal(logs, mst.NEG)
+    logs[0, :] = mst.NEG
+
+    def score(heads):
+        return sum(logs[d, heads[d]] for d in range(1, n + 1))
+
+    trees = list(_arborescences(n))
+    heads = tuple(int(h) for h in mst._cle(logs))
+    assert heads in trees
+    best = max(score(t) for t in trees)
+    # NEG arcs (zero probabilities) absorb the finite part of a sum, so
+    # scores are equal up to the rounding of the larger magnitude
+    assert score(heads) == pytest.approx(best, rel=1e-12, abs=1e-9)
+
+
 # ------------------------------------------------------------ tagger/parser rules
 
 def test_micro_example_parse_matches_reference_readme():
@@ -222,14 +276,28 @@ def test_lemma_rules():
 
 
 def test_decode_tree_zero_words():
-    """Public decode_batch on a zero-word doc (probs (1,1)) returns empty
-    heads instead of raising (ADVICE: argmax over empty slice)."""
-    import numpy as np
+    """decode_tree on a zero-word doc (probs (1,1)) returns empty heads
+    instead of raising (ADVICE: argmax over empty slice)."""
+    assert mst.decode_tree(np.ones((1, 1))).shape == (0,)
 
-    from nlp_cube_spark.kernels import mst
 
-    out = mst.decode_batch([np.ones((1, 1))])
-    assert len(out) == 1 and out[0].shape == (0,)
+def test_decode_tree_nan_probability_stays_nan():
+    """A NaN probability is not a zero: its log-score stays NaN, which
+    argmax takes as the maximum. Read as a zero, word 1 would attach to
+    word 2 instead ([2, 0])."""
+    p = np.array([[1.0, 0.0, 0.0], [np.nan, 0.0, 0.5], [0.9, 0.1, 0.0]])
+    with np.errstate(invalid="ignore"):
+        assert mst.decode_tree(p).tolist() == [0, 1]
+    assert mst.decode_tree(np.nan_to_num(p)).tolist() == [2, 0]
+
+
+def test_score_matrix_floor_slice_equals_fresh_floor():
+    """score_matrix slices the shared FLOOR_WORDS floor for short sentences:
+    each slice equals a floor built for that length, byte for byte, and the
+    returned matrix is a copy the caller may write to."""
+    for n in (1, 2, 5, arc_scores.FLOOR_WORDS - 1, arc_scores.FLOOR_WORDS):
+        assert arc_scores._FLOOR[: n + 1, : n + 1].tobytes() == arc_scores._floor(n).tobytes(), n
+    assert not np.shares_memory(arc_scores.score_matrix(["a"], ["NOUN"]), arc_scores._FLOOR)
 
 
 def test_decode_tree_invalid_candidate_loses():
@@ -254,3 +322,29 @@ def test_decode_tree_invalid_candidate_loses():
     assert heads.count(0) == 1
     # every chosen arc has nonzero probability (no NEG arc leaked through)
     assert all(p[d, h] > 0 for d, h in zip(range(1, 4), heads))
+
+
+# ------------------------------------------------------------ profiler keys
+
+def test_perfbench_profiler_keys_name_package_functions():
+    """perfbench's kernel and Arrow-stage splits look functions up by
+    (file basename, function name) in cProfile stats; a rename in the
+    package would make `kernels.*_s` read 0 silently. perfbench/workloads.py
+    is read with ast, not imported (it imports its siblings top-level)."""
+    root = pathlib.Path(__file__).resolve().parents[1]
+    tree = ast.parse((root / "perfbench" / "workloads.py").read_text())
+    keys = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Assign) and any(getattr(t, "id", None) == "_KERNELS" for t in node.targets):
+            keys |= set(ast.literal_eval(node.value).values())
+        elif isinstance(node, ast.Call) and getattr(node.func, "id", None) == "secs" and len(node.args) == 2:
+            if all(isinstance(a, ast.Constant) for a in node.args):
+                keys.add((node.args[0].value, node.args[1].value))
+    assert {("annotate.py", "run"), ("annotate.py", "_annotate_doc"), ("mst.py", "decode_tree")} <= keys
+    assert len(keys) >= 8
+    for fname, func in sorted(keys):
+        (path,) = (root / "nlp_cube_spark").rglob(fname)
+        defined = {
+            n.name for n in ast.walk(ast.parse(path.read_text())) if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        }
+        assert func in defined, (fname, func)

@@ -22,9 +22,10 @@ Ours:
     trips_df = cube.process_triples(spark, pages_df)
 
 Single-document calls run eagerly in-process (the reference's own
-execution model) on the production per-sentence path, the one the fused
-Arrow stages run per row: `annotate._annotate_doc`, parse cap included,
-and `annotate.sentence_triples`. DataFrame calls route to those stages.
+execution model) on the production NLP function, the one the fused Arrow
+stages run per batch: `annotate._annotate_doc` on a batch of one, parse
+cap included, and `annotate.sentence_triples`. DataFrame calls route to
+those stages.
 
 Word attribute names follow the reference exactly: index, word, lemma,
 upos, xpos, attrs, head, label, deps, space_after (README.md:59).
@@ -118,7 +119,7 @@ class Document:
 
 
 def _sentence(annotated, lang: str, lem_fn) -> Sentence:
-    """One `_annotate_sentence` tuple -> Sentence, lemmas by `lem_fn`."""
+    """One `_annotate_doc` sentence tuple -> Sentence, lemmas by `lem_fn`."""
     forms, space, mwt_ids, tok_forms, tags, heads, labels = annotated
     words = []
     for i, form in enumerate(forms):
@@ -151,15 +152,11 @@ class Cube:
             # entry point B (reference api.py cube(document)): keep the
             # provided tokenization, redo tagging/parsing/lemmas; an MWT group
             # re-expands from its surface token (as annotate.words_to_sentences)
-            fns = A._kernel_fns("rules", "rules", "dict")
-            sents = [
-                A._annotate_sentence(
-                    [(_surface(t), t[-1].space_after, bool(t[0].mwt_id)) for t in s._tokens()], lang, *fns
-                )
+            text = [
+                [(_surface(t), t[-1].space_after, bool(t[0].mwt_id)) for t in s._tokens()]
                 for s in text.sentences
             ]
-        else:
-            sents = A._annotate_doc(text, lang)
+        sents = A._annotate_doc(text, lang)
         lem_fn = get_lemmatizer("rules")
         return Document([_sentence(s, lang, lem_fn) for s in sents])
 

@@ -45,6 +45,8 @@ def _next_nominal(upos: list[str], start: int) -> int | None:
 def intended_arcs(forms: list[str], upos: list[str]) -> tuple[list[int], list[str]]:
     """Rule attachment: (head per word, 1-based, 0=ROOT) + deprel labels."""
     n = len(forms)
+    if n == 0:
+        return [], []
     root = _pick_root(upos)
     heads = [root + 1] * n
     labels = ["dep"] * n
@@ -128,27 +130,42 @@ FLOOR_WORDS = 128
 _FLOOR = _floor(FLOOR_WORDS)
 
 
-def score_matrix(forms: list[str], upos: list[str]) -> np.ndarray:
-    """(n+1, n+1) row-normalized head probabilities from the rule arcs.
+def score_matrix(forms, upos, intended=None) -> np.ndarray:
+    """Row-normalized head probabilities from the rule arcs.
 
     Intended arcs get a dominant score; every other (dep, head) pair gets a
     distance-decayed floor so the matrix is a realistic dense score surface
     (MST still has real work to do when rules conflict).
+
+    One sentence (lists of forms and UPOS tags) gives its (n+1, n+1) matrix.
+    k sentences of n words each (lists of those lists) give a (k, n+1, n+1)
+    stack, built with one floor broadcast, one STRONG assignment and one
+    row-normalize; a single sentence is a stack of one. `intended` passes
+    the intended_arcs heads (one list per sentence) when the caller has
+    them already.
     """
-    n = len(forms)
-    heads, _ = intended_arcs(forms, upos)
-    m = _FLOOR[: n + 1, : n + 1].copy() if n <= FLOOR_WORDS else _floor(n)
-    m[np.arange(1, n + 1), heads] = STRONG
+    if not forms or isinstance(forms[0], str):
+        return score_matrix([forms], [upos], None if intended is None else [intended])[0]
+    if intended is None:
+        intended = [intended_arcs(f, u)[0] for f, u in zip(forms, upos)]
+    k, n = len(forms), len(forms[0])
+    m = np.empty((k, n + 1, n + 1))
+    m[:] = _FLOOR[: n + 1, : n + 1] if n <= FLOOR_WORDS else _floor(n)
+    m[np.arange(k)[:, None], np.arange(1, n + 1), np.array(intended, dtype=np.int64).reshape(k, n)] = STRONG
     # row-normalize to probabilities (softmax analog)
-    m[1:] = m[1:] / m[1:].sum(axis=1, keepdims=True)
-    m[0, 0] = 1.0
+    m[:, 1:] /= m[:, 1:].sum(axis=2, keepdims=True)
+    m[:, 0, 0] = 1.0
     return m
 
 
-def label_arcs(forms: list[str], upos: list[str], heads: list[int]) -> list[str]:
+def label_arcs(
+    forms: list[str], upos: list[str], heads: list[int],
+    intended: tuple[list[int], list[str]] | None = None,
+) -> list[str]:
     """Label chosen arcs; mirrors the reference's post-MST label argmax
-    (parser.py:427-438) with rule lookups conditioned on the decoded head."""
-    intended_heads, intended_labels = intended_arcs(forms, upos)
+    (parser.py:427-438) with rule lookups conditioned on the decoded head.
+    `intended` is the sentence's intended_arcs, when the caller has it."""
+    intended_heads, intended_labels = intended if intended is not None else intended_arcs(forms, upos)
     out = []
     for i, h in enumerate(heads):
         if h == intended_heads[i]:

@@ -141,16 +141,30 @@ def get_scorer(name: str):
     heavyweight artifact shipped via modelstore.ship() and loaded lazily
     inside each python worker (the 100 TB XLM-R deployment path, SURVEY
     §2a #6/#11). Resolved INSIDE the python worker so only the name
-    string crosses the closure boundary."""
+    string crosses the closure boundary.
+
+    The seam scores a stack: (forms, upos, intended) for k sentences of n
+    words each -> (k, n+1, n+1). The rules kernel builds its stack in one
+    piece; the learned and external scorers keep their per-sentence math
+    and the seam stacks their matrices."""
     if name == "rules":
         from . import arc_scores
 
         return arc_scores.score_matrix
     if name == "learned":
-        return score_matrix
+        return _stacked(score_matrix)
     if name.startswith("external:"):
-        return external_arc_scorer(name.split(":", 1)[1])
+        return _stacked(external_arc_scorer(name.split(":", 1)[1]))
     raise ValueError(f"unknown arc scorer: {name!r}")
+
+
+def _stacked(score_one):
+    """A per-sentence (forms, upos) -> (n+1, n+1) scorer as a stack scorer."""
+
+    def scorer(forms, upos, intended=None):
+        return np.stack([score_one(f, u) for f, u in zip(forms, upos)])
+
+    return scorer
 
 
 # ------------------------------------------- external (heavyweight) models

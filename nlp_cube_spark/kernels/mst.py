@@ -8,8 +8,10 @@ probability formulation multiplies them, which makes identical argmax
 decisions with better numerics.
 
 Conventions (same as reference `decode`):
-- input `probs` is (n+1, n+1): probs[d, h] = P(head(d) = h), row/col 0 = ROOT.
-- output heads[1:]: head index per word, 0 means ROOT.
+- input `probs` is (n+1, n+1): probs[d, h] = P(head(d) = h), row/col 0 = ROOT;
+  or a (k, n+1, n+1) stack of k such matrices, one per n-word sentence.
+- output heads[1:]: head index per word, 0 means ROOT (one row per sentence
+  for a stack).
 - single-root enforcement: if the raw MST hangs several words off ROOT, try
   each plausible root, force it, and keep the highest-scoring tree —
   mirroring the reference's `roots_to_try` fallback ladder (utils.py:525-534)
@@ -107,21 +109,48 @@ def _cle(logs: np.ndarray) -> np.ndarray:
 
 
 def decode_tree(probs: np.ndarray) -> np.ndarray:
-    """probs (n+1, n+1) -> heads for words 1..n (0 = ROOT)."""
-    n1 = probs.shape[0]
-    if n1 <= 1:  # zero-word input: nothing to decode
-        return np.zeros(0, dtype=np.int64)
+    """probs (n+1, n+1) -> heads for words 1..n (0 = ROOT); a stack
+    (k, n+1, n+1) of k n-word sentences -> heads (k, n), each row decoded
+    as if alone. A single matrix is a stack of one.
+
+    The log-scores, masks and greedy argmax are taken once for the whole
+    stack. A row whose greedy heads are a tree with exactly one ROOT child
+    is final (Chu-Liu/Edmonds would return those heads unchanged); every
+    other row runs the contraction and single-root repair on its own."""
     p = np.asarray(probs, dtype=np.float64)
+    if p.ndim == 2:
+        return decode_tree(p[None])[0]
+    k, n1 = p.shape[0], p.shape[1]
+    if n1 <= 1:  # zero-word sentences: nothing to decode
+        return np.zeros((k, 0), dtype=np.int64)
     # zero and negative probabilities score NEG; `~(p <= 0)` keeps NaN in
     # the logged set, so a NaN probability stays NaN
     logs = np.log(p, out=np.full(p.shape, NEG), where=~(p <= 0))
-    np.fill_diagonal(logs, NEG)
-    logs[0, :] = NEG  # ROOT has no head
+    diag = np.arange(n1)
+    logs[:, diag, diag] = NEG
+    logs[:, 0, :] = NEG  # ROOT has no head
 
+    heads = logs.argmax(axis=2)
+    heads[:, 0] = 0
+    # pointer doubling: after it every word that reaches ROOT maps to 0, and
+    # a word on (or leading into) a cycle does not
+    anc = heads
+    for _ in range(n1.bit_length()):
+        anc = np.take_along_axis(anc, anc, axis=1)
+    final = ((heads[:, 1:] == 0).sum(axis=1) == 1) & (anc == 0).all(axis=1)
+    for r in np.flatnonzero(~final):
+        heads[r] = _decode_one(logs[r], p[r])
+    return heads[:, 1:]
+
+
+def _decode_one(logs: np.ndarray, probs: np.ndarray) -> np.ndarray:
+    """One sentence's masked log-scores (n+1, n+1) -> single-root heads
+    (heads[0] = 0): Chu-Liu/Edmonds, then the root-repair ladder."""
+    n1 = logs.shape[0]
     heads = _cle(logs)
     roots = np.where(heads[1:] == 0)[0] + 1
     if len(roots) == 1:
-        return heads[1:]
+        return heads
 
     # single-root repair ladder (mirrors reference utils.py:520-563)
     if len(roots) == 0:
@@ -148,4 +177,4 @@ def decode_tree(probs: np.ndarray) -> np.ndarray:
             score = float(others.sum()) + root_score
         if best is None or score > best_score:
             best_score, best = score, t
-    return best[1:]
+    return best

@@ -13,6 +13,12 @@ Scale notes:
   is Zipf-bounded: vocabulary grows ~O(sqrt(corpus)), stays dimension-sized).
 - documents never split across partitions (row = doc), so window chunking
   and boundary decode are partition-local by construction.
+- each stage hands its emit function EMIT_ROWS rows of an Arrow batch at
+  a time: _annotate_doc segments and tags document by document, then
+  parses every sentence of those rows in stacks of equal word count (one
+  vectorized score and one greedy decode per stack, capped at
+  STACK_BYTES), not one sentence at a time (SURVEY.md batching row:
+  bucket by length, score (B, n+1, n+1)).
 """
 
 from __future__ import annotations
@@ -108,6 +114,14 @@ def attach_lemmas(words: DataFrame, lemmatizer: str = "rules") -> DataFrame:
 
 # ---------------------------------------------------------------- stages
 
+# Rows per emit call. The parse stacks the sentences of one call, so a call
+# wants a few hundred sentences; the tagged sentences it holds until then
+# are its memory cost. Measured on open_pages, one process, 4 vCPU: 64-row
+# calls ran 2000 docs in 1.73 s and peaked at 6.5 MB of Python heap per
+# 500-doc batch; whole 500-row batches took 2.02 s and 19.2 MB.
+EMIT_ROWS = 64
+
+
 def _row_stage(
     df: DataFrame, cols: tuple[str, ...], schema: T.StructType, emit,
     fields: list[str] | None = None,
@@ -116,12 +130,14 @@ def _row_stage(
     page, or a sentence for reannotate).
 
     `df` is projected to `cols` at the stage boundary (Catalyst cannot
-    prune through a python stage, so nothing else crosses it). Per input
-    row, `emit(out, *row)` appends that row's outputs to `out`: one list
-    per name in `fields` (default: the schema's). Each batch's frame is
-    built from the schema's columns only — the output projection — and
-    empty batches/outputs yield nothing (an empty object column cannot
-    Arrow-convert to list<struct>)."""
+    prune through a python stage, so nothing else crosses it). Per slice
+    of at most EMIT_ROWS rows of an Arrow batch, `emit(out, *columns)`
+    gets one list per name in `cols` and appends the slice's outputs to
+    `out`: one list per name in `fields` (default: the schema's). Emit sees
+    many rows at once so that _annotate_doc can parse all of their
+    sentences in length-grouped stacks. Each batch's frame is built from the schema's columns only — the
+    output projection — and empty batches/outputs yield nothing (an empty
+    object column cannot Arrow-convert to list<struct>)."""
     names = schema.fieldNames()
     fields = fields or names
 
@@ -130,8 +146,9 @@ def _row_stage(
             if len(pdf) == 0:
                 continue
             out = {f: [] for f in fields}
-            for row in zip(*(pdf[c].tolist() for c in cols)):
-                emit(out, *row)
+            columns = [pdf[c].tolist() for c in cols]
+            for lo in range(0, len(pdf), EMIT_ROWS):
+                emit(out, *(col[lo : lo + EMIT_ROWS] for col in columns))
             if out[names[0]]:
                 yield pd.DataFrame({n: out[n] for n in names})
 
@@ -181,9 +198,10 @@ def fused_words(
 ) -> DataFrame:
     """pages -> flat words (no lemma) in ONE Arrow stage (cf. fused_triples)."""
 
-    def emit(out, url, lang, text):
-        for sid, sent in enumerate(_annotate_doc(text, lang, scorer, tagger, boundary, mwt)):
-            _append_words(out, url, lang, sid, *sent)
+    def emit(out, urls, langs, texts):
+        for url, lang, sents in zip(urls, langs, _annotate_doc(texts, langs, scorer, tagger, boundary, mwt)):
+            for sid, sent in enumerate(sents):
+                _append_words(out, url, lang, sid, *sent)
 
     return _row_stage(pages, ("url", "lang", text_col), FLAT_WORDS_SCHEMA, emit)
 
@@ -225,19 +243,19 @@ def fused_tags(
         [f for f in TAGS_FUSED_SCHEMA.fields if columns is None or f.name in columns]
     )
 
-    def emit(out, url, lang, text):
-        for sid, (forms, _sp, _mw, _tf, tags, _hd, _lb) in enumerate(
-            _annotate_doc(text, lang, tagger=tagger, boundary=boundary, mwt=mwt, parse=False)
-        ):
-            for i in range(len(forms)):
-                out["url"].append(url)
-                out["lang"].append(lang)
-                out["sent_id"].append(sid)
-                out["word_id"].append(i + 1)
-                out["form"].append(forms[i])
-                out["upos"].append(tags[i][0])
-                out["xpos"].append(tags[i][1])
-                out["feats"].append(tags[i][2])
+    def emit(out, urls, langs, texts):
+        docs = _annotate_doc(texts, langs, tagger=tagger, boundary=boundary, mwt=mwt, parse=False)
+        for url, lang, sents in zip(urls, langs, docs):
+            for sid, (forms, _sp, _mw, _tf, tags, _hd, _lb) in enumerate(sents):
+                for i in range(len(forms)):
+                    out["url"].append(url)
+                    out["lang"].append(lang)
+                    out["sent_id"].append(sid)
+                    out["word_id"].append(i + 1)
+                    out["form"].append(forms[i])
+                    out["upos"].append(tags[i][0])
+                    out["xpos"].append(tags[i][1])
+                    out["feats"].append(tags[i][2])
 
     return _row_stage(pages, ("url", "lang", text_col), schema, emit,
                       fields=TAGS_FUSED_SCHEMA.fieldNames())
@@ -305,13 +323,13 @@ def reannotate(
     """Entry point B end-to-end: keep the caller's tokenization, redo
     tagging + parsing + lemmas. Output = flat annotated words DF.
 
-    Each sentence runs the same per-sentence function as the fused path
-    (_annotate_sentence: MWT -> tag -> capped parse), so trees match it."""
+    Each sentence runs through _annotate_doc as a one-sentence tokenized
+    document (MWT -> tag -> capped parse), so trees match the fused path."""
 
-    def emit(out, url, lang, sid, tokens):
-        sent = [(t["form"], t["space_after"], t["is_mwt"]) for t in tokens]
-        _append_words(out, url, lang, sid,
-                      *_annotate_sentence(sent, lang, *_kernel_fns(scorer, tagger, mwt)))
+    def emit(out, urls, langs, sids, tokens):
+        docs = [[[(t["form"], t["space_after"], t["is_mwt"]) for t in toks]] for toks in tokens]
+        for url, lang, sid, (sent,) in zip(urls, langs, sids, _annotate_doc(docs, langs, scorer, tagger, mwt=mwt)):
+            _append_words(out, url, lang, sid, *sent)
 
     flat = _row_stage(words_to_sentences(words), ("url", "lang", "sent_id", "tokens"),
                       FLAT_WORDS_SCHEMA, emit)
@@ -320,35 +338,47 @@ def reannotate(
 
 # ---------------------------------------------------------------- fusion
 
-def _kernel_fns(scorer: str, tagger: str, mwt: str):
-    """(score_fn, tag_fn, mwt_fn) for the named model seams, resolved
-    inside the python worker (only the names cross the closure)."""
-    from ..kernels.learned import get_mwt_expander, get_scorer, get_tagger
-
-    return get_scorer(scorer), get_tagger(tagger), get_mwt_expander(mwt)
-
-
 def _annotate_doc(
-    text: str, lang: str, scorer: str = "rules",
+    doc, lang, scorer: str = "rules",
     tagger: str = "rules", boundary: str = "rules", mwt: str = "dict",
     parse: bool = True,
 ):
-    """One document through segment -> mwt -> tag [-> parse]. Returns
-    (forms, space, mwt_ids, tok_forms, tags, heads, labels) per sentence.
+    """Documents through segment -> mwt -> tag [-> parse]: the one NLP
+    function of the fused stages and the eager API.
+
+    With a list of langs, `doc` is a list of documents (a slice of an
+    Arrow batch) and the result one list per document of its sentences'
+    (forms, space, mwt_ids, tok_forms, tags, heads, labels). With a `lang`
+    string, `doc` is one document, run as a batch of one, and the result
+    its sentence list. A document is its text, or its sentences already
+    tokenized as (form, space_after, is_mwt) lists (entry point B), which
+    skips segmentation. Every sentence is tagged on its own; then all of
+    them are parsed at once (_parse), in stacks of equal-length sentences.
+
     scorer/tagger/boundary/mwt pick the kernel behind each model seam.
     parse=False skips arc scoring + MST + labels (heads/labels empty) —
     the manual column-pruning knob for tag-only consumers: Catalyst cannot
     prune through a python kernel, and the O(n^2) score matrix + CLE
     decode dominate per-document cost on long documents."""
-    score_fn, tag_fn, mwt_fn = _kernel_fns(scorer, tagger, mwt)
-    _, sents = segment_rules.segment(text or "", lang, boundary=boundary)
-    return [_annotate_sentence(sent, lang, score_fn, tag_fn, mwt_fn, parse) for sent in sents]
+    if isinstance(lang, str):
+        return _annotate_doc([doc], [lang], scorer, tagger, boundary, mwt, parse)[0]
+    # the model seams resolve inside the python worker: only names cross the closure
+    from ..kernels.learned import get_mwt_expander, get_scorer, get_tagger
+
+    score_fn, tag_fn, mwt_fn = get_scorer(scorer), get_tagger(tagger), get_mwt_expander(mwt)
+    docs = []
+    for d, lg in zip(doc, lang):
+        sents = segment_rules.segment(d or "", lg, boundary=boundary)[1] if d is None or isinstance(d, str) else d
+        docs.append([_annotate_sentence(sent, lg, tag_fn, mwt_fn) for sent in sents])
+    if not parse:
+        return [[(*s, [], []) for s in sents] for sents in docs]
+    trees = iter(_parse([(s[0], [t[0] for t in s[4]]) for sents in docs for s in sents], score_fn))
+    return [[(*s, *next(trees)) for s in sents] for sents in docs]
 
 
-def _annotate_sentence(sent, lang: str, score_fn, tag_fn, mwt_fn, parse: bool = True):
+def _annotate_sentence(sent, lang: str, tag_fn, mwt_fn):
     """One sentence of (form, space_after, is_mwt) tokens through
-    mwt -> tag [-> capped parse]; the tuple _annotate_doc returns per
-    sentence."""
+    mwt -> tag: (forms, space, mwt_ids, tok_forms, tags)."""
     forms, space, mwt_ids, tok_forms = [], [], [], []
     for tok_idx, (form, spa, is_mwt) in enumerate(sent, start=1):
         words = mwt_fn(form, lang) if is_mwt else [form]
@@ -357,13 +387,7 @@ def _annotate_sentence(sent, lang: str, score_fn, tag_fn, mwt_fn, parse: bool = 
             space.append(spa)
             mwt_ids.append(tok_idx if is_mwt and len(words) > 1 else 0)
             tok_forms.append(form)
-    tags = tag_fn(forms, lang)
-    if parse:
-        upos = [t[0] for t in tags]
-        heads, labels = _parse_capped(forms, upos, score_fn)
-    else:
-        heads, labels = [], []
-    return forms, space, mwt_ids, tok_forms, tags, heads, labels
+    return forms, space, mwt_ids, tok_forms, tag_fn(forms, lang)
 
 
 # Single-sentence parse cap: the arc score matrix is O(n^2) memory and the
@@ -374,32 +398,70 @@ def _annotate_sentence(sent, lang: str, score_fn, tag_fn, mwt_fn, parse: bool = 
 # run-on-sentence relation), so the result is still a single valid tree.
 MAX_PARSE_LEN = 1024
 
+# Byte budget of one score stack: one capped sentence's float64 matrix, the
+# largest a worker held when sentences were parsed one at a time. A stack
+# of n-word sentences holds at most STACK_BYTES // (8 (n+1)^2) of them.
+STACK_BYTES = 8 * (MAX_PARSE_LEN + 1) ** 2
 
-def _parse_capped(forms: list[str], upos: list[str], score_fn) -> tuple[list[int], list[str]]:
-    n = len(forms)
-    if n <= MAX_PARSE_LEN:
-        heads = mst.decode_tree(score_fn(forms, upos)).tolist()
-        return heads, arc_scores.label_arcs(forms, upos, heads)
-    heads: list[int] = []
-    labels: list[str] = []
-    sent_root: int | None = None  # 1-based global index of the first chunk's root
-    for lo in range(0, n, MAX_PARSE_LEN):
-        cf, cu = forms[lo : lo + MAX_PARSE_LEN], upos[lo : lo + MAX_PARSE_LEN]
-        ch = mst.decode_tree(score_fn(cf, cu)).tolist()
-        cl = arc_scores.label_arcs(cf, cu, ch)
-        for i, (h, lab) in enumerate(zip(ch, cl)):
-            if h == 0:
-                if sent_root is None:
+
+def _stacks(lengths: list[int]) -> list[list[int]]:
+    """Indices into `lengths`, grouped by length and cut so that each
+    group's (k, n+1, n+1) float64 score stack fits in STACK_BYTES."""
+    by_len: dict[int, list[int]] = {}
+    for i, n in enumerate(lengths):
+        by_len.setdefault(n, []).append(i)
+    groups = []
+    for n, idx in by_len.items():
+        per = max(1, STACK_BYTES // (8 * (n + 1) ** 2))
+        groups += [idx[lo : lo + per] for lo in range(0, len(idx), per)]
+    return groups
+
+
+def _parse(sents: list[tuple[list[str], list[str]]], score_fn) -> list[tuple[list[int], list[str]]]:
+    """(forms, upos) per sentence -> (heads, labels) per sentence.
+
+    Sentences over MAX_PARSE_LEN words are cut into MAX_PARSE_LEN-word
+    chunks. Chunks of equal length are scored as one stack and decoded in
+    one decode_tree call (_stacks), and each chunk's intended_arcs feed
+    both the scorer and label_arcs. A cut sentence keeps its first chunk's
+    root; every later root hangs off it as 'parataxis'."""
+    units = [
+        (forms[lo : lo + MAX_PARSE_LEN], upos[lo : lo + MAX_PARSE_LEN])
+        for forms, upos in sents
+        for lo in range(0, max(len(forms), 1), MAX_PARSE_LEN)
+    ]
+    intended = [arc_scores.intended_arcs(f, u) for f, u in units]
+    heads: list = [None] * len(units)
+    for grp in _stacks([len(f) for f, _ in units]):
+        probs = score_fn([units[i][0] for i in grp], [units[i][1] for i in grp], [intended[i][0] for i in grp])
+        for i, h in zip(grp, mst.decode_tree(probs).tolist()):
+            heads[i] = h
+    labels = [arc_scores.label_arcs(f, u, h, ia) for (f, u), h, ia in zip(units, heads, intended)]
+
+    trees, k = [], 0
+    for forms, _ in sents:
+        if len(forms) <= MAX_PARSE_LEN:
+            trees.append((heads[k], labels[k]))
+            k += 1
+            continue
+        th: list[int] = []
+        tl: list[str] = []
+        sent_root: int | None = None  # 1-based index of the first chunk's root
+        for lo in range(0, len(forms), MAX_PARSE_LEN):
+            for i, (h, lab) in enumerate(zip(heads[k], labels[k])):
+                if h == 0 and sent_root is None:
                     sent_root = lo + i + 1
-                    heads.append(0)
-                    labels.append(lab)
+                    th.append(0)
+                    tl.append(lab)
+                elif h == 0:
+                    th.append(sent_root)
+                    tl.append("parataxis")
                 else:
-                    heads.append(sent_root)
-                    labels.append("parataxis")
-            else:
-                heads.append(h + lo)
-                labels.append(lab)
-    return heads, labels
+                    th.append(h + lo)
+                    tl.append(lab)
+            k += 1
+        trees.append((th, tl))
+    return trees
 
 
 TRIPLES_FUSED_SCHEMA = T.StructType(
@@ -472,10 +534,9 @@ def fused_triples(
     the Spark analog of the reference running the LM forward inside
     collate_fn (utils_tokenizer.py:560-572)."""
 
-    def emit(out, url, lang, text):
-        for sid, (forms, _sp, _mw, _tf, tags, heads, labels) in enumerate(
-            _annotate_doc(text, lang, scorer, tagger, boundary, mwt)
-        ):
-            sentence_triples(forms, tags, heads, labels, lang, partial(_add_triple, out, url, sid, lang))
+    def emit(out, urls, langs, texts):
+        for url, lang, sents in zip(urls, langs, _annotate_doc(texts, langs, scorer, tagger, boundary, mwt)):
+            for sid, (forms, _sp, _mw, _tf, tags, heads, labels) in enumerate(sents):
+                sentence_triples(forms, tags, heads, labels, lang, partial(_add_triple, out, url, sid, lang))
 
     return _row_stage(pages, ("url", "lang", text_col), TRIPLES_FUSED_SCHEMA, emit)

@@ -70,18 +70,17 @@ def _token_spaces(mwt_ids, space_after) -> list[bool]:
 def fused_tokenizer_targets(pages: DataFrame, text_col: str = "text") -> DataFrame:
     """pages -> (url, sent_id, pretok_id, pretok, target), one Arrow stage."""
 
-    def emit(out, url, lang, text):
-        for sid, (_f, space, mwt_ids, tok_forms, _tg, _hd, _lb) in enumerate(
-            _annotate_doc(text, lang, parse=False)
-        ):
-            gold = gold_tokens_from_words(tok_forms, mwt_ids)
-            pretoks, tgts = _sentence_targets(gold, _token_spaces(mwt_ids, space), lang)
-            for pid, (ptok, tgt) in enumerate(zip(pretoks, tgts), start=1):
-                out["url"].append(url)
-                out["sent_id"].append(sid)
-                out["pretok_id"].append(pid)
-                out["pretok"].append(ptok)
-                out["target"].append(tgt)
+    def emit(out, urls, langs, texts):
+        for url, lang, sents in zip(urls, langs, _annotate_doc(texts, langs, parse=False)):
+            for sid, (_f, space, mwt_ids, tok_forms, _tg, _hd, _lb) in enumerate(sents):
+                gold = gold_tokens_from_words(tok_forms, mwt_ids)
+                pretoks, tgts = _sentence_targets(gold, _token_spaces(mwt_ids, space), lang)
+                for pid, (ptok, tgt) in enumerate(zip(pretoks, tgts), start=1):
+                    out["url"].append(url)
+                    out["sent_id"].append(sid)
+                    out["pretok_id"].append(pid)
+                    out["pretok"].append(ptok)
+                    out["target"].append(tgt)
 
     return _row_stage(pages, ("url", "lang", text_col), TARGETS_SCHEMA, emit)
 

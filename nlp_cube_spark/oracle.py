@@ -49,7 +49,10 @@ MAX_PARSE_LEN = 1024
 
 def _parse(forms: list[str], upos: list[str]) -> tuple[list[int], list[str]]:
     """Parse MAX_PARSE_LEN-word chunks independently, then hang every later
-    chunk's root off the first chunk's root as 'parataxis'."""
+    chunk's root off the first chunk's root as 'parataxis'. A zero-word
+    sentence has no heads."""
+    if not forms:
+        return [], []
     heads: list[int] = []
     labels: list[str] = []
     for lo in range(0, len(forms), MAX_PARSE_LEN):

@@ -162,10 +162,92 @@ def test_parse_cap_boundary_parity():
 
     forms = ["the", "fox", "admires", "a", "dog"] * 20  # 100 words, << cap
     upos = [t[0] for t in __import__("nlp_cube_spark.kernels.tagger_rules", fromlist=["x"]).tag_sentence(forms, "en")]
-    capped_heads, capped_labels = A._parse_capped(forms, upos, arc_scores.score_matrix)
+    ((capped_heads, capped_labels),) = A._parse([(forms, upos)], arc_scores.score_matrix)
     plain = mst.decode_tree(arc_scores.score_matrix(forms, upos)).tolist()
     assert capped_heads == plain
     assert capped_labels == arc_scores.label_arcs(forms, upos, plain)
+
+
+def test_zero_word_sentence_has_no_heads():
+    """A zero-word sentence (a real group once the parse groups sentences
+    by length) scores to the (1, 1) ROOT matrix, and the decoder, the
+    batch parse and the oracle all give it no heads."""
+    from nlp_cube_spark import oracle
+    from nlp_cube_spark.kernels import arc_scores, mst
+
+    assert arc_scores.score_matrix([], []).tolist() == [[1.0]]
+    stack = arc_scores.score_matrix([[], []], [[], []])
+    assert stack.shape == (2, 1, 1)
+    assert mst.decode_tree(stack).shape == (2, 0)
+    assert A._parse([([], []), (["Alice", "runs"], ["PROPN", "VERB"]), ([], [])], arc_scores.score_matrix) == [
+        ([], []), ([2, 0], ["nsubj", "root"]), ([], [])
+    ]
+    assert oracle._parse([], []) == ([], [])
+
+
+def test_batch_mixing_long_and_short_sentences_matches_per_document(spark):
+    """One Arrow batch holding a 3·MAX_PARSE_LEN-word sentence and short
+    documents, over more than EMIT_ROWS rows: fused_words parses their
+    sentences in length stacks, and every row equals _annotate_doc on that
+    document alone, parataxis arcs included."""
+    texts = [
+        ("u0", "en", "Alice joins Bob. The fox admires a dog."),
+        ("u1", "en", " ".join(["data join table"] * A.MAX_PARSE_LEN)),
+        ("u2", "es", "Al planeta viaja Emma."),
+        ("u3", "en", ""),
+        ("u4", "en", "Bob , the scientist , reads data ."),
+    ] + [(f"s{i}", "en", "Alice joins Bob.") for i in range(A.EMIT_ROWS)]
+    pages = spark.createDataFrame(texts, "url string, lang string, text string").coalesce(1)
+    got = sorted(tuple(r) for r in A.fused_words(pages).select("url", "sent_id", "word_id", "head", "deprel").collect())
+    want = sorted(
+        (url, sid, i + 1, h, lab)
+        for url, lang, text in texts
+        for sid, (*_tagged, heads, labels) in enumerate(A._annotate_doc(text, lang))
+        for i, (h, lab) in enumerate(zip(heads, labels))
+    )
+    assert got == want
+    assert sum(1 for r in got if r[4] == "parataxis") == 2
+
+
+def test_parse_stacks_stay_within_byte_budget():
+    """The length grouping never builds a score stack over STACK_BYTES:
+    neither for many short sentences of one length (the budget cuts them
+    into several stacks) nor for capped chunks of long sentences."""
+    from nlp_cube_spark.kernels import arc_scores, tagger_rules
+
+    lengths = [12] * 20000 + [A.MAX_PARSE_LEN] * 3 + [600] * 40 + [0] * 5 + [3] * 7
+    groups = A._stacks(lengths)
+    assert sorted(i for g in groups for i in g) == list(range(len(lengths)))
+    for g in groups:
+        (n,) = {lengths[i] for i in g}
+        assert len(g) * 8 * (n + 1) ** 2 <= A.STACK_BYTES
+    assert len(A._stacks([12] * 20000)) > 1
+
+    seen = []
+
+    def scorer(forms, upos, intended=None):
+        probs = arc_scores.score_matrix(forms, upos, intended)
+        seen.append(probs.nbytes)
+        return probs
+
+    forms = ["data", "join", "table"] * A.MAX_PARSE_LEN
+    upos = [t[0] for t in tagger_rules.tag_sentence(forms, "en")]
+    sents = [(forms, upos), (forms[:600], upos[:600]), (forms[:600], upos[:600])] + [(forms[:9], upos[:9])] * 50
+    trees = A._parse(sents, scorer)
+    assert [len(h) for h, _ in trees] == [len(f) for f, _ in sents]
+    assert seen and max(seen) <= A.STACK_BYTES
+
+
+def test_intended_arcs_runs_once_per_sentence(monkeypatch):
+    """On the rules path the parse computes each sentence's intended arcs
+    once and hands them to both the scorer and label_arcs."""
+    from nlp_cube_spark.kernels import arc_scores
+
+    calls = []
+    real = arc_scores.intended_arcs
+    monkeypatch.setattr(arc_scores, "intended_arcs", lambda f, u: calls.append(len(f)) or real(f, u))
+    docs = A._annotate_doc(["Alice joins Bob. The fox admires a dog.", "Bob reads data .", ""], ["en", "en", "en"])
+    assert len(calls) == sum(map(len, docs)) == 3
 
 
 def test_r6_new_ops_degenerate_inputs(spark):

@@ -324,6 +324,71 @@ def test_decode_tree_invalid_candidate_loses():
     assert all(p[d, h] > 0 for d, h in zip(range(1, 4), heads))
 
 
+# ------------------------------------------------------------ stacked parse
+
+_KINDS = ("dirichlet", "zeros", "cycle", "no_root", "multi_root", "zero_row", "nan_row")
+
+
+def _kind_matrix(kind, n, rng):
+    p = rng.dirichlet(np.ones(n + 1), size=n + 1)
+    if kind == "zeros":
+        p[rng.random(p.shape) < 0.5] = 0.0
+    elif kind == "cycle" and n >= 2:
+        p[1, 2] = p[2, 1] = 5.0
+    elif kind == "no_root":
+        p[1:, 0] = 0.0
+    elif kind == "multi_root":
+        p[1:, 0] = 5.0
+    elif kind == "zero_row":
+        p[rng.integers(1, n + 1)] = 0.0
+    elif kind == "nan_row":
+        p[rng.integers(1, n + 1)] = np.nan
+    return p
+
+
+@given(
+    st.integers(min_value=1, max_value=7),
+    st.lists(st.sampled_from(_KINDS), min_size=1, max_size=12),
+    st.integers(min_value=0, max_value=10_000),
+)
+@settings(max_examples=150, deadline=None)
+def test_decode_tree_stack_rows_equal_single(n, kinds, seed):
+    """decode_tree on a stack decodes each row as if alone, and a row that
+    skips the contraction (greedy heads already a single-root tree) gets
+    the heads Chu-Liu/Edmonds + the root-repair ladder give it."""
+    rng = np.random.default_rng(seed)
+    p = np.array([_kind_matrix(k, n, rng) for k in kinds])
+    with np.errstate(invalid="ignore"):
+        heads = mst.decode_tree(p)
+        assert heads.shape == (len(kinds), n)
+        for r in range(len(kinds)):
+            assert heads[r].tolist() == mst.decode_tree(p[r]).tolist()
+            logs = np.log(p[r], out=np.full(p[r].shape, mst.NEG), where=~(p[r] <= 0))
+            np.fill_diagonal(logs, mst.NEG)
+            logs[0, :] = mst.NEG
+            assert heads[r].tolist() == mst._decode_one(logs, p[r])[1:].tolist()
+
+
+@pytest.mark.parametrize("n", [1, 127, 128, 129, 300])
+def test_score_matrix_stack_bytes_equal_per_sentence(n):
+    """The stacked rules scorer (one floor broadcast, one STRONG assignment,
+    one row-normalize) gives, row by row, the bytes of the one-sentence
+    formula; n spans the shared floor's edge (FLOOR_WORDS = 128)."""
+    rng = np.random.default_rng(n)
+    tags = ["NOUN", "VERB", "DET", "ADP", "PUNCT", "AUX", "NUM", "PROPN", "PRON", "CCONJ", "ADJ"]
+    upos = [[str(t) for t in rng.choice(tags, n)] for _ in range(4)]
+    forms = [["w"] * n for _ in upos]
+    stack = arc_scores.score_matrix(forms, upos)
+    assert stack.shape == (4, n + 1, n + 1)
+    for f, u, m in zip(forms, upos, stack):
+        want = arc_scores._floor(n)
+        want[np.arange(1, n + 1), arc_scores.intended_arcs(f, u)[0]] = arc_scores.STRONG
+        want[1:] = want[1:] / want[1:].sum(axis=1, keepdims=True)
+        want[0, 0] = 1.0
+        assert m.tobytes() == want.tobytes()
+        assert arc_scores.score_matrix(f, u).tobytes() == want.tobytes()
+
+
 # ------------------------------------------------------------ profiler keys
 
 def test_perfbench_profiler_keys_name_package_functions():

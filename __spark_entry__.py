@@ -491,10 +491,10 @@ def q_minhash_band_pairs(spark, sf_dir):
 
 
 def q_simhash_signatures(spark, sf_dir):
-    # codegen'd aggregation kernel — bit-identical to simhash64 (the
-    # interpreted-HOF oracle form). Single-file sf scan -> 1-2 partitions,
-    # so spread the (tiny) text rows before the token explode+agg stage;
-    # at real scale the table scan supplies parallelism itself.
+    # codegen'd aggregation kernel; the oracle form is _simhash_duck.
+    # Single-file sf scan -> 1-2 partitions, so spread the (tiny) text
+    # rows before the token explode+agg stage; at real scale the table
+    # scan supplies parallelism itself.
     from nlp_cube_spark.operators.dedup import simhash64_agg
 
     docs = _t(spark, sf_dir, "documents").repartition(
@@ -531,7 +531,7 @@ def q_training_data_prep(spark, sf_dir):
 
 
 def q_simhash_near_dups(spark, sf_dir):
-    """SimHash blocking end-to-end: signatures (length-adaptive kernel) ->
+    """SimHash blocking end-to-end: signatures (simhash64_agg) ->
     15-bit pigeonhole chunk self-join -> exact Hamming verify. The oracle
     replays signature, chunking, join, and bit_count(xor) in SQL."""
     from nlp_cube_spark.operators.dedup import simhash_near_dups
@@ -2338,33 +2338,32 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # relational queries (green since round 1) trail.  Every entry is still
 # replayed locally against its DuckDB oracle in tests/test_entry_queries.py.
 _QUERIES = {
-        # --- round-7 window: the 15 queries that have NEVER been
-        # driver-checked lead (they retire the registry's only remaining
-        # evidence debt), then the 3 clustering queries whose Lloyd
-        # trajectory switched to integer nano-unit accumulation this
-        # round (code changed => driver evidence must be refreshed), then
-        # 32 rows last driver-checked in r5 = exactly 50 ---
+        # --- code changed since the window last moved: the 7 bench
+        # queries rewritten in r8 (not correctness-checked since), then
+        # the 4 dedup queries whose operators lost their alternative
+        # kernels and hash options ---
+        "simhash_signatures": q_simhash_signatures,
+        "ann_cosine_topk": q_ann_cosine_topk,
+        "doc_quality": q_doc_quality,
+        "doc_fingerprints": q_doc_fingerprints,
+        "region_revenue": q_region_revenue,
+        "top_revenue_orders": q_top_revenue_orders,
+        "training_data_prep": q_training_data_prep,
+        "simhash_near_dups": q_simhash_near_dups,
+        "doc_winnow_fps": q_doc_winnow_fps,
+        "winnow_match_pairs": q_winnow_match_pairs,
+        "exact_substr_spans": q_exact_substr_spans,
+        # --- green in CORRECTNESS_r07 and CORRECTNESS_r08 ---
         "doc_containment_dedup": q_doc_containment_dedup,
         "doc_similar_tfidf": q_doc_similar_tfidf,
-        "doc_readability": q_doc_readability,
         "doc_ngram_novelty": q_doc_ngram_novelty,
-        "doc_length_histogram": q_doc_length_histogram,
-        "rrf_top_terms": q_rrf_top_terms,
-        "search_docs_bm25": q_search_docs_bm25,
         "kg_entity_bfs": q_kg_entity_bfs,
         "kg_entity_hits": q_kg_entity_hits,
         "kg_entity_neighborhood": q_kg_entity_neighborhood,
         "kg_degree_histogram": q_kg_degree_histogram,
-        "events_trailing_hour": q_events_trailing_hour,
-        "user_retention_cohorts": q_user_retention_cohorts,
-        "lineitem_profile": q_lineitem_profile,
-        "lineitem_correlations": q_lineitem_correlations,
-        # --- nano-unit Lloyd trajectory (changed r7) ---
         "ann_kmeans_centroids": q_ann_kmeans_centroids,
         "ann_pq_topk": q_ann_pq_topk,
         "embedding_semdedup": q_embedding_semdedup,
-        # --- r7-new operators (webclean: C4 / Gopher / source caps;
-        # KG link prediction + negative sampling) ---
         "doc_c4_lines": q_doc_c4_lines,
         "doc_gopher_quality": q_doc_gopher_quality,
         "docs_capped_per_source": q_docs_capped_per_source,
@@ -2372,7 +2371,6 @@ _QUERIES = {
         "kg_negative_samples": q_kg_negative_samples,
         "kg_transe_embeddings": q_kg_transe_embeddings,
         "kg_completion_topk": q_kg_completion_topk,
-        # --- last driver-checked r5, rotated forward ---
         "kg_triples": q_kg_triples,
         "kg_words": q_kg_words,
         "kg_words_learned": q_kg_words_learned,
@@ -2384,12 +2382,9 @@ _QUERIES = {
         "kg_predicate_counts": q_kg_predicate_counts,
         "doc_perplexity": q_doc_perplexity,
         "kg_entity_triangles": q_kg_entity_triangles,
-        "source_sampling_weights": q_source_sampling_weights,
         "doc_decontaminate": q_doc_decontaminate,
         "doc_scrub_pii": q_doc_scrub_pii,
         "doc_repetition_stats": q_doc_repetition_stats,
-        "source_mix": q_source_mix,
-        "doc_length_quantiles_twopass": q_doc_length_quantiles_twopass,
         "doc_wordgram_embeddings": q_doc_wordgram_embeddings,
         "multimodal_decoded": q_multimodal_decoded,
         "multimodal_transformed": q_multimodal_transformed,
@@ -2399,16 +2394,21 @@ _QUERIES = {
         "pack_shards": q_pack_shards,
         "tokenizer_targets": q_tokenizer_targets,
         # ---------- window boundary (first 50 above) ----------
-        # below: locally oracled on every pytest run. First the 7
-        # r5-checked rows the r7-new queries displaced, then the 16
-        # r5-checked rows deferred to r8 (registry 119 > 2x50, so a
-        # strict 50/round rotation leaves ~19 rows per cycle at
-        # three-round-old evidence — mostly the trivial relational
-        # queries green since r1 plus the two static vocab dimensions,
-        # all byte-unchanged since they last passed), then the 50
-        # r6-checked rows (CORRECTNESS_r06, 100% green) minus the two
-        # promoted above.
-        # --- r7 additions past the window cut (driver-check in r8) ---
+        # below: locally oracled on every pytest run, in rotation order.
+        # --- displaced from the window by the lead block above
+        # (green in CORRECTNESS_r07/r08), first to rotate back ---
+        "events_trailing_hour": q_events_trailing_hour,
+        "user_retention_cohorts": q_user_retention_cohorts,
+        "lineitem_profile": q_lineitem_profile,
+        "lineitem_correlations": q_lineitem_correlations,
+        "doc_length_histogram": q_doc_length_histogram,
+        "doc_readability": q_doc_readability,
+        "rrf_top_terms": q_rrf_top_terms,
+        "search_docs_bm25": q_search_docs_bm25,
+        "source_sampling_weights": q_source_sampling_weights,
+        "source_mix": q_source_mix,
+        "doc_length_quantiles_twopass": q_doc_length_quantiles_twopass,
+        # --- r7 additions past the window cut, then older rows ---
         "cms_term_counts": q_cms_term_counts,
         "source_doremi_weights": q_source_doremi_weights,
         "doc_ccnet_buckets": q_doc_ccnet_buckets,
@@ -2438,13 +2438,10 @@ _QUERIES = {
         "bm25_top_terms": q_bm25_top_terms,
         "kg_entity_pagerank": q_kg_entity_pagerank,
         "doc_length_quantiles": q_doc_length_quantiles,
-        "training_data_prep": q_training_data_prep,
         "vocab_words": q_vocab_words,
         "vocab_chars": q_vocab_chars,
         "shipdate_pruned_agg": q_shipdate_pruned_agg,
-        "region_revenue": q_region_revenue,
         "window_top3": q_window_top3,
-        "top_revenue_orders": q_top_revenue_orders,
         "semi_join": q_semi_join,
         "anti_join": q_anti_join,
         "rollup_orders": q_rollup_orders,
@@ -2455,22 +2452,19 @@ _QUERIES = {
         "setops_brands": q_setops_brands,
         "string_folding": q_string_folding,
         "distinct_brand_type": q_distinct_brand_type,
-        # --- driver-green in r6 (CORRECTNESS_r06), rotates back in r8 ---
+        # --- green in CORRECTNESS_r06 ---
         "weighted_sample_docs": q_weighted_sample_docs,
         "user_funnel": q_user_funnel,
         "source_ngram_overlap": q_source_ngram_overlap,
         "doc_passage_chunks": q_doc_passage_chunks,
         "corpus_zipf_fit": q_corpus_zipf_fit,
         "kg_entity_ktruss": q_kg_entity_ktruss,
-        "doc_winnow_fps": q_doc_winnow_fps,
-        "winnow_match_pairs": q_winnow_match_pairs,
         "source_unimax_weights": q_source_unimax_weights,
         "doc_bigram_lm": q_doc_bigram_lm,
         "kg_entity_kcore": q_kg_entity_kcore,
         "lr_quality_weights": q_lr_quality_weights,
         "doc_lr_scores": q_doc_lr_scores,
         "dsir_log_weights": q_dsir_log_weights,
-        "exact_substr_spans": q_exact_substr_spans,
         "doc_dup_coverage": q_doc_dup_coverage,
         "bpe_merges": q_bpe_merges,
         "bpe_token_counts": q_bpe_token_counts,
@@ -2482,18 +2476,13 @@ _QUERIES = {
         "near_dup_clusters": q_near_dup_clusters,
         "exact_dups": q_exact_dups,
         "minhash_band_pairs": q_minhash_band_pairs,
-        "simhash_signatures": q_simhash_signatures,
-        "simhash_near_dups": q_simhash_near_dups,
         "ngram_jaccard": q_ngram_jaccard,
         "embedding_near_dups": q_embedding_near_dups,
         "ann_ivf_topk": q_ann_ivf_topk,
-        "ann_cosine_topk": q_ann_cosine_topk,
         "stratified_sample": q_stratified_sample,
         "train_val_test_split": q_train_val_test_split,
-        "doc_fingerprints": q_doc_fingerprints,
         "doc_token_counts": q_doc_token_counts,
         "doc_lang_id": q_doc_lang_id,
-        "doc_quality": q_doc_quality,
         "salted_supplier_counts": q_salted_supplier_counts,
         "salted_join_parts": q_salted_join_parts,
         "sampled_hot_parts": q_sampled_hot_parts,

@@ -11,7 +11,7 @@ its covered words; `SpaceAfter=No` in MISC when space_after is false.
 
 MWT spacing lives on the TOKEN (the head row), as in valid CoNLL-U: parse
 propagates the head row's MISC flag to its covered words (their own MISC is
-ignored — covered rows carry '_'), and both serializers emit the flag on
+ignored — covered rows carry '_'), and the serializer emits the flag on
 the head row only (from the group's last word) with '_' on covered rows.
 Round-trips of external CoNLL-U with SpaceAfter=No on an MWT line are
 byte-faithful.
@@ -120,53 +120,6 @@ def read_conllu(spark: SparkSession, path: str, lang: str = "") -> DataFrame:
     return files.mapInPandas(run, schema=WORDS_SCHEMA)
 
 
-def serialize_words_grouped(words: DataFrame) -> DataFrame:
-    """applyInPandas variant of the serializer: one python group per url.
-
-    Same output as `serialize_words` (cross-checked in tests); exists to
-    (a) exercise the grouped-map Arrow surface (SURVEY.md §2d UDF row) and
-    (b) serve as the template for per-document kernels that genuinely need
-    the whole document in one pandas frame."""
-    out_schema = T.StructType(
-        [T.StructField("url", T.StringType()), T.StructField("conllu", T.StringType())]
-    )
-
-    def one_doc(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["sent_id", "word_id"])
-        sents = []
-        for _, sent in pdf.groupby("sent_id", sort=True):
-            lines, emitted = [], set()
-            rows = sent.to_dict("records")
-            for w in rows:
-                if w["mwt_id"] > 0 and w["mwt_id"] not in emitted:
-                    emitted.add(w["mwt_id"])
-                    group = [x for x in rows if x["mwt_id"] == w["mwt_id"]]
-                    lines.append(
-                        "\t".join(
-                            [
-                                f"{group[0]['word_id']}-{group[-1]['word_id']}",
-                                w["tok_form"], "_", "_", "_", "_", "_", "_", "_",
-                                "_" if group[-1]["space_after"] else "SpaceAfter=No",
-                            ]
-                        )
-                    )
-                lines.append(
-                    "\t".join(
-                        [
-                            str(w["word_id"]), w["form"], w["lemma"], w["upos"],
-                            w["xpos"], w["feats"], str(w["head"]), w["deprel"], "_",
-                            # covered rows carry '_': the token (head row)
-                            # owns the spacing flag
-                            "_" if (w["mwt_id"] > 0 or w["space_after"]) else "SpaceAfter=No",
-                        ]
-                    )
-                )
-            sents.append("\n".join(lines))
-        return pd.DataFrame({"url": [pdf["url"].iloc[0]], "conllu": ["\n\n".join(sents) + "\n"]})
-
-    return words.groupBy("url").applyInPandas(one_doc, schema=out_schema)
-
-
 def serialize_words(words: DataFrame) -> DataFrame:
     """words DF -> one CoNLL-U text per url (url, conllu STRING).
 
@@ -201,8 +154,8 @@ def serialize_words(words: DataFrame) -> DataFrame:
                     concat(cast(w.word_id as string), '-',
                            cast(w.word_id + size(filter(ws, q -> q.mwt_id = w.mwt_id)) - 1 as string)),
                     w.tok_form, '_', '_', '_', '_', '_', '_', '_',
-                    -- token flag = the group's LAST word (same word the
-                    -- grouped serializer uses; covered rows carry '_')
+                    -- token flag = the group's LAST word (covered rows
+                    -- carry '_')
                     CASE WHEN element_at(filter(ws, q -> q.mwt_id = w.mwt_id), -1).space_after
                          THEN '_' ELSE 'SpaceAfter=No' END),
                   concat_ws('\t', cast(w.word_id as string), w.form, w.lemma, w.upos,

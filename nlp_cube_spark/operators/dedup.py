@@ -3,7 +3,8 @@
 All hash math uses md5 (JVM built-in, whole-stage codegen) truncated to 60
 bits via conv(hex,16,10) so results are engine-portable: the DuckDB oracle
 reproduces every value bit-for-bit with `('0x'||substr(md5(x),1,15))::BIGINT`.
-No Python in any hot path — every operator here is pure Catalyst.
+No Python in any hot path — every batch operator here is pure Catalyst
+(`simhash64_arrow`, the streaming SimHash kernel, is the one Arrow UDF).
 
 Scale design:
 - exact: one hash-aggregate (partial+final) on md5(text) — the canonical
@@ -12,8 +13,8 @@ Scale design:
   generation is a self-equi-join on (band_id, band_sig) — shuffle keyed on
   band signatures, which are uniform by construction (no skew). Band count
   tunes recall/cost; signatures are 16 longs/doc regardless of doc size.
-- SimHash: 64 bit-majority expressions over the token array, emitted as one
-  generated column expression; near-dup blocking joins on 16-bit chunks
+- SimHash: per-token 60-bit hashes exploded and bit-counted in one
+  partial aggregation per doc; near-dup blocking joins on 15-bit chunks
   (Hamming<=3 guarantees a matching chunk by pigeonhole).
 - n-gram Jaccard: exact verifier on LSH candidates (array_intersect), never
   run all-pairs at scale.
@@ -370,36 +371,13 @@ def ngram_jaccard_pairs(
     )
 
 
-def simhash64(docs: DataFrame, text_col: str = "text", out_col: str = "simhash") -> DataFrame:
-    """64-bit SimHash over whitespace tokens, fully JVM-side.
-
-    bit k of the signature = majority vote of bit k over per-token 60-bit
-    md5 hashes (tokens weighted once each; >= breaks ties toward 1)."""
-    toks = f"transform(filter(split(lower({text_col}), ' '), t -> t <> ''), t -> {_h60('t')})"
-    bit_terms = " + ".join(
-        f"(case when size(filter(_th, h -> (h div {1 << k}) % 2 = 1)) * 2 >= size(_th)"
-        f" then cast({1 << k} as bigint) else 0L end)"
-        for k in range(60)
-    )
-    return (
-        docs.withColumn("_th", F.expr(toks))
-        .withColumn(out_col, F.expr(f"case when size(_th) = 0 then 0L else {bit_terms} end"))
-        .drop("_th")
-    )
-
-
 def simhash64_arrow(docs: DataFrame, text_col: str = "text", out_col: str = "simhash") -> DataFrame:
-    """Arrow-kernel variant of `simhash64` — bit-identical output.
+    """Streaming SimHash kernel: every input column plus `out_col`.
 
-    Measured across doc lengths (scripts/bench_simhash_lengths.py, 500
-    docs, warm workers, local[32], min-of-3): interpreted-HOF wins at the
-    fixture shape (~54 tok/doc: 0.39s vs 0.43s), the two tie around ~550
-    tok/doc, and Arrow wins in the web-document regime (~1,630 tok/doc:
-    0.52s vs 0.63s; ~5,430 tok/doc: 0.79s vs 1.05s) because Arrow
-    transfer + python dispatch are per-doc/flat while the ~60 interpreted
-    bit-terms cost scales with token count. `simhash64_auto` dispatches on
-    a sampled mean token count with the crossover at 550; `simhash64`
-    stays the DuckDB-oracle form."""
+    A stream cannot `groupBy` without a watermark, so streaming inputs
+    take this per-row Arrow kernel instead of `simhash64_agg`; the two
+    are bit-identical (suite-tested against the DuckDB oracle,
+    `__spark_entry__._simhash_duck`)."""
     import hashlib
 
     import numpy as np
@@ -436,29 +414,26 @@ def simhash64_agg(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     out_col: str = "simhash",
 ) -> DataFrame:
-    """(id_col, simhash) — bit-identical to `simhash64`, fully codegen'd.
+    """(id_col, simhash): 64-bit SimHash over whitespace tokens, the
+    batch kernel, fully codegen'd.
 
-    The simhash64 HOF form pays ~60 interpreted lambda passes per document
-    (Spark HOFs are never codegen'd — CLAUDE.md); this form keeps every
-    per-token op inside WholeStageCodegen: explode tokens -> one 60-bit
-    md5 hash per token -> 60 partial-aggregated bit-count sums keyed on
-    the doc id -> majority assembly as a pure projection. A document's
-    exploded tokens stay in its scan partition, so partial (map-side)
-    aggregation collapses to ONE 61-long row per doc before the shuffle
-    (guide §2.3 "aggregate before you shuffle") — the scale-safe shape at
-    any corpus size. Requires a doc id column to group on; the generic
-    keep-all-columns form stays `simhash64`.
-
-    Measured (sf1.0, 50k salad docs, local[32], min-of-3): 10.6s (HOF)
-    -> see OPTIMIZATION_r08.md; equality with simhash64 is suite-tested
-    at two SFs plus the arrow-parity test battery."""
+    Bit k of the signature = majority vote of bit k over per-token 60-bit
+    md5 hashes (tokens weighted once each; >= breaks ties toward 1);
+    documents with no token get 0. Every per-token op stays inside
+    WholeStageCodegen: explode tokens -> one 60-bit md5 hash per token ->
+    60 partial-aggregated bit-count sums keyed on the doc id -> majority
+    assembly as a pure projection. A document's exploded tokens stay in
+    its scan partition, so partial (map-side) aggregation collapses to
+    ONE 61-long row per doc before the shuffle (guide §2.3 "aggregate
+    before you shuffle") — the scale-safe shape at any corpus size.
+    Requires a doc id column to group on. Timings: OPTIMIZATION_r08.md §1."""
     toks = docs.select(
         F.col(id_col),
         F.explode_outer(F.split(F.lower(F.col(text_col)), " ")).alias("_t"),
     )
     # invalid tokens ('' from split, NULL text) carry a NULL hash: count()
     # skips them and every bit-sum conditions on them, so n and the bit
-    # counts see exactly the tokens simhash64's filter(t -> t <> '') keeps
+    # counts see exactly the non-empty tokens
     hashed = toks.select(
         id_col,
         F.when(F.col("_t").isNotNull() & (F.col("_t") != ""), F.expr(_h60("_t"))).alias("_h"),
@@ -478,63 +453,19 @@ def simhash64_agg(
     )
 
 
-SIMHASH_CROSSOVER_TOKENS = 550  # measured: scripts/bench_simhash_lengths.py
-
-
-def _pick_simhash_impl(docs: DataFrame, text_col: str, sample_docs: int = 2048) -> str:
-    """Sample mean whitespace-token count and pick the faster signature
-    kernel ('hof' below the measured ~550-token crossover, 'arrow' above).
-    Costs one small eager job over `sample_docs` rows — negligible next to
-    the signature pass itself at any scale."""
-    row = (
-        docs.select(F.size(F.split(F.col(text_col), " ")).alias("n"))
-        .limit(sample_docs)
-        .agg(F.avg("n").alias("avg"))
-        .collect()[0]
-    )
-    avg = row["avg"] or 0.0
-    return "arrow" if avg > SIMHASH_CROSSOVER_TOKENS else "hof"
-
-
-def simhash64_auto(
-    docs: DataFrame, text_col: str = "text", out_col: str = "simhash",
-    impl: str | None = None,
-) -> DataFrame:
-    """Length-adaptive SimHash: dispatches to the interpreted-HOF or the
-    Arrow kernel on a sampled mean token count (both are bit-identical, so
-    the choice is purely physical). This is the scale-safe default for
-    inputs of unknown length distribution — web documents sit well above
-    the crossover, fixture-sized rows below it.
-
-    Pass `impl` ('hof' | 'arrow') to skip the sampling probe and keep plan
-    construction fully lazy — required for streaming DataFrames (the probe
-    is an eager job) and for lazy composition where re-executing upstream
-    lineage at plan time would be expensive. Streaming inputs without an
-    explicit impl default to 'arrow' (the web-length side of the
-    crossover) instead of probing."""
-    if impl is None:
-        impl = "arrow" if docs.isStreaming else _pick_simhash_impl(docs, text_col)
-    if impl not in ("hof", "arrow"):
-        raise ValueError(f"impl must be 'hof' or 'arrow', got {impl!r}")
-    fn = simhash64_arrow if impl == "arrow" else simhash64
-    return fn(docs, text_col, out_col)
-
-
 def simhash_near_dups(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    max_hamming: int = 3, impl: str | None = None,
+    max_hamming: int = 3,
 ) -> DataFrame:
     """Near-dup pairs by SimHash: block on 15-bit chunks (pigeonhole: any
     pair with Hamming<=3 over 60 bits shares at least one of 4 chunks),
-    verify Hamming exactly with bit_count(xor). Batch inputs use the
-    codegen'd aggregation signature kernel (simhash64_agg — fastest at
-    every doc length, bit-identical); streaming inputs (no groupBy
-    without a watermark) and explicit `impl` requests keep the
-    length-adaptive kernels (see simhash64_auto)."""
-    if impl is None and not docs.isStreaming:
-        sig = simhash64_agg(docs, id_col, text_col)
+    verify Hamming exactly with bit_count(xor). Batch inputs take
+    `simhash64_agg`, streaming inputs `simhash64_arrow` (no groupBy
+    without a watermark); the signatures are bit-identical."""
+    if docs.isStreaming:
+        sig = simhash64_arrow(docs, text_col).select(id_col, "simhash")
     else:
-        sig = simhash64_auto(docs, text_col, impl=impl).select(id_col, "simhash")
+        sig = simhash64_agg(docs, id_col, text_col)
     chunks = sig.select(
         id_col,
         "simhash",
@@ -646,7 +577,6 @@ def winnow_fingerprints(
     text_col: str = "text",
     k: int = 8,
     w: int = 4,
-    hash_impl: str = "md5",
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken,
     SIGMOD 2003 — the MOSS local fingerprinting algorithm; public
@@ -673,25 +603,10 @@ def winnow_fingerprints(
     winnowing is positional (cf. the ngrams_sql note: the regex trick
     cannot carry positions). Everything else is narrow; downstream
     matching joins on fp (see winnow_match_pairs). Cost note (measured
-    sf0.1: 20s for 10M grams): the per-gram hash is the dominant term.
-    `hash_impl` picks it: 'md5' (default) exists for DuckDB-oracle
-    portability; 'xxhash64' is Spark's codegen'd 64-bit hash, an order
-    of magnitude cheaper per gram with an identical plan — the
-    production setting whenever cross-engine replay is not needed.
-    Winnowing's guarantee (any shared substring of >= k + w - 1 chars
-    yields a shared fingerprint) holds under ANY gram hash, so
-    downstream match semantics are preserved; only the incidental
-    fingerprint values differ."""
+    sf0.1: 20s for 10M grams): the per-gram md5 hash is the dominant
+    term; it is the hash the DuckDB oracle replays."""
     if k < 1 or w < 1:
         raise ValueError("winnow_fingerprints: k and w must be >= 1")
-    if hash_impl == "md5":
-        gram_hash = "cast(conv(substr(md5(gram), 1, 10), 16, 10) as bigint)"
-    elif hash_impl == "xxhash64":
-        # mask to the same 40-bit field md5 uses so the (hash, pos)
-        # bigint packing below is impl-independent
-        gram_hash = f"xxhash64(gram) & {(1 << 40) - 1}"
-    else:
-        raise ValueError(f"winnow_fingerprints: unknown hash_impl {hash_impl!r}")
     norm = f"regexp_replace(lower(trim({text_col})), '\\\\s+', ' ')"
     grams = docs.select(
         F.col(id_col),
@@ -718,7 +633,8 @@ def winnow_fingerprints(
             ).cast("bigint"),
         )
         .otherwise(
-            F.expr(gram_hash) * F.lit(1 << 22) + F.col("_p0") + 1
+            F.expr("cast(conv(substr(md5(gram), 1, 10), 16, 10) as bigint)")
+            * F.lit(1 << 22) + F.col("_p0") + 1
         )
         .alias("_key"),
     )
@@ -748,7 +664,6 @@ def winnow_match_pairs(
     w: int = 4,
     min_shared: int = 2,
     max_bucket: int | None = 64,
-    hash_impl: str = "md5",
 ) -> DataFrame:
     """Document pairs sharing >= min_shared winnowing fingerprints —
     the overlap-detection join over winnow_fingerprints. Same blocked
@@ -756,10 +671,8 @@ def winnow_match_pairs(
     all-pairs), with ubiquitous fingerprints (boilerplate k-grams hot
     enough to exceed `max_bucket` docs) dropped before the join — the
     lsh_candidate_pairs cap discipline; coverage loss is boilerplate
-    only, and the cap is the knob to turn at 100 TB.  `hash_impl`
-    passes through to winnow_fingerprints ('xxhash64' for production,
-    'md5' for oracle replay)."""
-    fps = winnow_fingerprints(docs, id_col, text_col, k, w, hash_impl).select(
+    only, and the cap is the knob to turn at 100 TB."""
+    fps = winnow_fingerprints(docs, id_col, text_col, k, w).select(
         id_col, "fp"
     ).dropDuplicates()
     if max_bucket is not None:

@@ -20,8 +20,7 @@ linearity of the sketch, and strictly cheaper in a batch engine.
 
 Hashing is the oracle-portable md5 device (13 hex chars = 52 bits, an
 exact double; see CLAUDE.md) keyed as md5(row || ':' || term) so the d
-rows are independent. Production swap to xxhash64(term, row) is the same
-one-liner as operators/dedup.py's hash_impl switch.
+rows are independent.
 """
 
 from __future__ import annotations

@@ -62,7 +62,6 @@ def exact_substring_spans(
     min_len: int = 12,
     max_docs_per_gram: int = 64,
     checkpoint: bool = True,
-    hash_impl: str = "md5",
 ) -> DataFrame:
     """Maximal cross-document shared token spans of >= min_len tokens.
 
@@ -71,15 +70,8 @@ def exact_substring_spans(
     tokens.  min_len must be >= k (a span shorter than the anchor gram
     cannot be observed).
 
-    `hash_impl` picks the anchor hash: 'md5' (default, 60-bit) exists
-    for DuckDB-oracle portability; 'xxhash64' is Spark's codegen'd
-    64-bit hash, ~an order cheaper per gram.  The OUTPUT is identical
-    whenever both hashes are collision-free on the corpus's gram set
-    (spans are a pure function of gram equality), which the parity
-    test certifies on fixtures; at web scale the xxhash64 collision
-    odds (~2^-64 per gram pair, and a collision only fabricates an
-    anchor that the span-merge then has to extend) are the documented
-    trade-off.
+    Anchor grams are keyed by their 60-bit md5 hash, the hash the
+    DuckDB oracle replays.
 
     The cap is COUNT(DISTINCT doc) per gram — constant-size agg state,
     never a per-group value buffer (a collect-the-bucket formulation
@@ -92,19 +84,13 @@ def exact_substring_spans(
     """
     if min_len < k:
         raise ValueError(f"min_len ({min_len}) must be >= k ({k})")
-    if hash_impl == "md5":
-        gram_hash = _h60("gram")
-    elif hash_impl == "xxhash64":
-        gram_hash = "xxhash64(gram)"
-    else:
-        raise ValueError(f"exact_substring_spans: unknown hash_impl {hash_impl!r}")
     anchors = (
         docs.select(
             F.col(id_col).alias("_id"),
             F.posexplode(F.expr(ngrams_sql(text_col, k))).alias("pos", "gram"),
         )
         # hash + drop the gram string BEFORE any shuffle
-        .select("_id", "pos", F.expr(gram_hash).alias("gh"))
+        .select("_id", "pos", F.expr(_h60("gram")).alias("gh"))
     )
     if checkpoint:
         # anchors feeds BOTH the keep agg and the shared join — without

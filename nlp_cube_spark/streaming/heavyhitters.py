@@ -95,9 +95,13 @@ def start_cms_stream(
     max_files: int = 4, checkpoint_dir: str | None = None,
 ):
     """availableNow stream: parquet docs in -> per-batch delta sketches
-    out. Returns the StreamingQuery; await with .awaitTermination()."""
+    out. Returns the StreamingQuery; await with .awaitTermination().
+
+    The sketch reads only `text_col`, so the source schema is that one
+    column: fixed, never inferred, so the stream also starts on a
+    source directory that holds no files yet."""
     src = spark.readStream.option("maxFilesPerTrigger", max_files).schema(
-        spark.read.parquet(src_dir).schema
+        f"{text_col} string"
     ).parquet(src_dir)
     writer = (
         src.writeStream.foreachBatch(

@@ -7,7 +7,7 @@ fixture grammar), >= 100k words at the default 900 docs.
 
 Path exercised (the reference's cube(document) UD entry point,
 SURVEY §3): entry A annotates raw text (fused_words) = GOLD ->
-io/conllu.serialize_words_grouped -> one .conllu file per document on
+io/conllu.serialize_words -> one .conllu file per document on
 disk -> io/conllu.read_conllu scan -> operators/annotate.reannotate
 (caller tokenization kept, tagging/parsing/lemmas redone) = SYSTEM ->
 operators/evaluate.evaluate = all 13 conll18 metrics, plus
@@ -53,7 +53,7 @@ def run(spark, n_docs: int = 900, seed: int = 4242) -> dict:
     # one .conllu file per document, named by the doc index so the two
     # sides join on a shared url key after basename normalization
     out_dir = tempfile.mkdtemp(prefix="openvocab_conllu_")
-    for r in CU.serialize_words_grouped(gold).collect():
+    for r in CU.serialize_words(gold).collect():
         i = r.url.rsplit("/", 1)[1]
         with open(os.path.join(out_dir, f"{i}.conllu"), "w") as f:
             f.write(r.conllu)

@@ -2,9 +2,11 @@
 engine-portability checks against DuckDB for the md5-based hash math."""
 
 import duckdb
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+import __spark_entry__ as E
 from nlp_cube_spark.operators import dedup as D, similarity as S
 
 
@@ -56,7 +58,7 @@ def test_ngram_jaccard(spark, docs):
 
 
 def test_simhash_properties(spark, docs):
-    sig = {r.doc_id: r.simhash for r in D.simhash64(docs).collect()}
+    sig = {r.doc_id: r.simhash for r in D.simhash64_agg(docs).collect()}
     assert sig[1] == sig[2]  # identical text -> identical signature
     nd = {(r.doc_a, r.doc_b): r.hamming for r in D.simhash_near_dups(docs, max_hamming=12).collect()}
     assert nd[(1, 2)] == 0
@@ -173,52 +175,60 @@ def test_cosine_near_dups_finds_planted_clones(spark):
     assert all(abs(v - 1.0) < 1e-6 for v in got.values())
 
 
+def _simhash_oracle(docs):
+    """(doc_id, simhash) from the DuckDB oracle, `__spark_entry__._simhash_duck`,
+    over `docs` registered as `documents`."""
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(
+        [tuple(r) for r in docs.select("doc_id", "text").collect()], columns=["doc_id", "text"]
+    ))
+    return set(con.sql(E._simhash_duck()).fetchall())
+
+
 def test_simhash_arrow_bit_identical(spark, docs):
-    a = {(r.doc_id, r.simhash) for r in D.simhash64(docs).select("doc_id", "simhash").collect()}
-    b = {(r.doc_id, r.simhash) for r in D.simhash64_arrow(docs).select("doc_id", "simhash").collect()}
-    assert a == b
+    """Both SimHash kernels equal the DuckDB oracle on the fixture docs."""
+    agg = {tuple(r) for r in D.simhash64_agg(docs).collect()}
+    arrow = {(r.doc_id, r.simhash) for r in D.simhash64_arrow(docs).collect()}
+    assert agg == arrow == _simhash_oracle(docs)
 
 
 def test_simhash_auto_dispatch(spark, docs):
-    """The length-adaptive kernel picks HOF below the measured ~550-token
-    crossover and Arrow above it, and its output equals simhash64 either way."""
-    from pyspark.sql import functions as F
+    """simhash_near_dups picks its kernel by input kind: a batch input
+    takes the codegen'd `simhash64_agg` (no Arrow UDF in the plan). On the
+    fixture docs repeated 100x (~900 tokens each, the long-document
+    regime) both kernels still equal the DuckDB oracle, and the batch
+    path finds the identical pair."""
+    long_docs = docs.withColumn(
+        "text", F.array_join(F.array_repeat(F.col("text"), 100), " ")
+    ).localCheckpoint()
+    nd = D.simhash_near_dups(long_docs, max_hamming=12)
+    assert "MapInPandas" not in nd._jdf.queryExecution().analyzed().toString()
+    assert {(r.doc_a, r.doc_b): r.hamming for r in nd.collect()}[(1, 2)] == 0
+    agg = {tuple(r) for r in D.simhash64_agg(long_docs).collect()}
+    arrow = {(r.doc_id, r.simhash) for r in D.simhash64_arrow(long_docs).collect()}
+    assert agg == arrow == _simhash_oracle(long_docs)
 
-    assert D._pick_simhash_impl(docs, "text") == "hof"  # fixture docs ~35 tokens
-    long_docs = docs.withColumn("text", F.array_join(F.array_repeat(F.col("text"), 100), " "))
-    assert D._pick_simhash_impl(long_docs, "text") == "arrow"
-    a = {(r.doc_id, r.simhash) for r in D.simhash64_auto(long_docs).select("doc_id", "simhash").collect()}
-    b = {(r.doc_id, r.simhash) for r in D.simhash64(long_docs).select("doc_id", "simhash").collect()}
-    assert a == b
-    # empty/degenerate input must not fail the sampler
-    empty = docs.where(F.lit(False))
-    assert D._pick_simhash_impl(empty, "text") == "hof"
 
-
-def test_simhash_auto_explicit_impl_stays_lazy(spark, docs, monkeypatch):
-    """Round-4 ADVICE: an explicit impl override must skip the eager
-    sampling probe entirely (lazy composition / streaming safety), and a
-    streaming input without an override defaults to 'arrow' instead of
-    failing on the probe job."""
-    from pyspark.sql import functions as F
-
-    def boom(*a, **k):
-        raise AssertionError("probe must not run when impl is explicit")
-
-    monkeypatch.setattr(D, "_pick_simhash_impl", boom)
-    got = {(r.doc_id, r.simhash) for r in D.simhash64_auto(docs, impl="hof").select("doc_id", "simhash").collect()}
-    want = {(r.doc_id, r.simhash) for r in D.simhash64(docs).select("doc_id", "simhash").collect()}
-    assert got == want
-    with pytest.raises(ValueError):
-        D.simhash64_auto(docs, impl="turbo")
-    # streaming: plan must CONSTRUCT without an eager job
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="simhash_stream_")
-    docs.write.mode("overwrite").parquet(d)
-    sdf = spark.readStream.schema(docs.schema).parquet(d)
-    out = D.simhash64_auto(sdf)
-    assert out.isStreaming and "simhash" in out.columns
+@pytest.mark.parametrize("kernel", ["agg", "arrow", "streaming"])
+def test_simhash_degenerate_text(spark, kernel, tmp_path):
+    """NULL, empty and whitespace-only text hash to 0 on both kernels. On
+    a stream, simhash_near_dups takes the Arrow kernel and builds its plan
+    without firing a Spark job."""
+    blank = spark.createDataFrame(
+        [(1, None), (2, ""), (3, " "), (4, "    ")], "doc_id long, text string"
+    )
+    if kernel != "streaming":
+        sig = D.simhash64_agg(blank) if kernel == "agg" else D.simhash64_arrow(blank).drop("text")
+        assert {tuple(r) for r in sig.collect()} == {(i, 0) for i in range(1, 5)}
+    else:
+        src = str(tmp_path / "docs")
+        blank.write.parquet(src)
+        tracker = spark.sparkContext.statusTracker()
+        before = set(tracker.getJobIdsForGroup())
+        out = D.simhash_near_dups(spark.readStream.schema(blank.schema).parquet(src))
+        assert set(tracker.getJobIdsForGroup()) - before == set()
+        assert out.isStreaming
+        assert "MapInPandas" in out._jdf.queryExecution().analyzed().toString()
 
 
 def test_near_dup_clusters_transitive(spark):
@@ -535,12 +545,11 @@ def test_clustering_trajectory_partitioning_invariant(spark):
     })
 
 
-def test_winnow_hash_impl_guarantee_parity(spark):
+def test_winnow_guarantee_planted_pair(spark):
     """winnow's guarantee — any shared substring of >= k + w - 1 chars
-    yields a shared fingerprint — holds under EITHER gram hash, so the
-    planted duplicate pair must surface on both the md5 (oracle) and
-    xxhash64 (production) paths; fingerprint VALUES legitimately differ
-    (different hash => different window minima)."""
+    yields a shared fingerprint — surfaces the planted duplicate pair,
+    and every fingerprint fits the 40-bit md5 field of the packed
+    (hash, pos) key."""
     shared = "the winnowing guarantee holds for any gram hash function"
     docs = spark.createDataFrame(
         [
@@ -550,19 +559,10 @@ def test_winnow_hash_impl_guarantee_parity(spark):
         ],
         "doc_id long, text string",
     )
-    for impl in ("md5", "xxhash64"):
-        pairs = {
-            (r.doc_a, r.doc_b)
-            for r in D.winnow_match_pairs(docs, hash_impl=impl).collect()
-        }
-        assert (1, 2) in pairs and (1, 3) not in pairs, impl
-        fps = D.winnow_fingerprints(docs, hash_impl=impl)
-        # 40-bit field: packing invariant holds for both impls
-        assert fps.where("fp < 0 or fp >= pow(2, 40)").count() == 0
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        D.winnow_fingerprints(docs, hash_impl="sha1")
+    pairs = {(r.doc_a, r.doc_b) for r in D.winnow_match_pairs(docs).collect()}
+    assert (1, 2) in pairs and (1, 3) not in pairs
+    fps = D.winnow_fingerprints(docs)
+    assert fps.where("fp < 0 or fp >= pow(2, 40)").count() == 0
 
 
 def test_ann_recall_at_k_operator(spark):

@@ -3,6 +3,9 @@ on Spark, and when an oracle_sql() entry exists, row count + column names +
 order-insensitive values must match DuckDB at sf0.01."""
 
 import math
+import os
+import subprocess
+import sys
 
 import duckdb
 import pytest
@@ -72,6 +75,16 @@ def _multiset(rows, cols):
 
 ORACLED = sorted(set(E.queries()) & set(E.oracle_sql()))
 ROWS_ONLY = sorted(set(E.queries()) - set(E.oracle_sql()))
+
+
+def test_count_queries_matches_coverage():
+    """COVERAGE.md's totals and generated first-50 window match the
+    registry: scripts/count_queries.py exits non-zero on any drift, e.g.
+    a registry reorder without `--write-window`."""
+    script = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                          "scripts", "count_queries.py")
+    r = subprocess.run([sys.executable, script], capture_output=True, text=True, timeout=300)
+    assert r.returncode == 0, r.stdout + r.stderr
 
 
 def test_entry_smoke(spark):

@@ -24,14 +24,6 @@ def test_engine_serialization_matches_golden(spark):
     assert rebuilt == golden
 
 
-def test_grouped_serializer_matches_sql_serializer(spark):
-    pages = pages_df(spark, 12, seed=4242)
-    words = A.annotate(pages).localCheckpoint()
-    sql_ser = {r.url: r.conllu for r in CU.serialize_words(words).collect()}
-    py_ser = {r.url: r.conllu for r in CU.serialize_words_grouped(words).collect()}
-    assert sql_ser == py_ser
-
-
 def test_golden_roundtrips_through_scanner(spark):
     golden = open(GOLDEN).read()
     rows = CU.parse_conllu_text(golden)

@@ -354,15 +354,19 @@ def test_compact_store_rerun_to_finish_after_crash(spark, dirs):
     assert "u8" not in surv and "u9" in surv
 
 
-def test_cms_stream_merges_linearly_and_idempotently(spark, dirs):
-    from nlp_cube_spark.operators.sketches import cms_term_counts, count_min_sketch
-    from nlp_cube_spark.streaming import heavyhitters as H
-
-    docs = spark.createDataFrame(
+def _cms_docs(spark):
+    return spark.createDataFrame(
         [(i, ("hot " * 20 if i % 3 == 0 else f"cold{i} word{i % 5}").strip())
          for i in range(30)],
         "doc_id long, text string",
     )
+
+
+def test_cms_stream_merges_linearly_and_idempotently(spark, dirs):
+    from nlp_cube_spark.operators.sketches import cms_term_counts, count_min_sketch
+    from nlp_cube_spark.streaming import heavyhitters as H
+
+    docs = _cms_docs(spark)
     # several source files -> several micro-batches
     for k in range(3):
         docs.where(F.col("doc_id") % 3 == k).write.mode("append").parquet(dirs["src"])
@@ -416,3 +420,20 @@ def test_cms_stream_merges_linearly_and_idempotently(spark, dirs):
     for t, c in exact.items():
         if c >= 100:
             assert t in hh
+
+
+def test_cms_stream_starts_on_empty_source(spark, dirs):
+    """The stream starts on a source directory that holds no files yet;
+    a restart on the same checkpoint sketches the files written since."""
+    from nlp_cube_spark.operators.sketches import count_min_sketch
+    from nlp_cube_spark.streaming import heavyhitters as H
+
+    assert H.start_cms_stream(spark, dirs["src"], dirs["out"],
+                              checkpoint_dir=dirs["ckpt"]).awaitTermination(180)
+    docs = _cms_docs(spark)
+    docs.write.mode("append").parquet(dirs["src"])
+    assert H.start_cms_stream(spark, dirs["src"], dirs["out"],
+                              checkpoint_dir=dirs["ckpt"]).awaitTermination(180)
+    merged = {(r.row, r.bucket): r.cell
+              for r in H.sketch_totals(spark, dirs["out"]).collect()}
+    assert merged == {(r.row, r.bucket): r.cell for r in count_min_sketch(docs).collect()}

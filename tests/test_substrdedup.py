@@ -100,38 +100,3 @@ def test_internal_repetition_multiple_diagonals(spark):
     assert got == [(1, 2, 0, 0, 12), (1, 2, 0, 13, 12)]
     cov = {r.doc_id: r.dup_tokens for r in dup_span_coverage(docs, spans).collect()}
     assert cov[2] == 24  # disjoint intervals sum
-
-
-def test_hash_impl_parity(spark):
-    """The production xxhash64 anchor hash produces EXACTLY the same
-    spans as the md5 oracle hash whenever both are collision-free on
-    the corpus's gram set (spans are a pure function of gram equality):
-    certify on the sf0.001 documents table plus the planted fixture."""
-    fixture = _docs(
-        spark,
-        [
-            (1, "x1 x2 " + SHARED + " x3 x4"),
-            (2, "y1 " + SHARED + " y2 y3 y4"),
-            (3, "unrelated words only here"),
-        ],
-    )
-    corpora = [
-        fixture,
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet"),
-    ]
-    for docs in corpora:
-        a = {
-            tuple(r)
-            for r in exact_substring_spans(docs, k=4, min_len=6).collect()
-        }
-        b = {
-            tuple(r)
-            for r in exact_substring_spans(
-                docs, k=4, min_len=6, hash_impl="xxhash64"
-            ).collect()
-        }
-        assert a == b
-    assert a  # the sf corpus really contains shared spans
-
-    with pytest.raises(ValueError):
-        exact_substring_spans(fixture, hash_impl="fnv")

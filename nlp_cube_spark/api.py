@@ -25,7 +25,8 @@ Single-document calls run eagerly in-process (the reference's own
 execution model) on the production NLP function, the one the fused Arrow
 stages run per batch: `annotate._annotate_doc` on a batch of one, parse
 cap included, and `annotate.sentence_triples`. DataFrame calls route to
-those stages.
+those stages with the rules kernels; like the reference's `Cube`, they
+take no kernel switch.
 
 Word attribute names follow the reference exactly: index, word, lemma,
 upos, xpos, attrs, head, label, deps, space_after (README.md:59).
@@ -174,17 +175,16 @@ class Cube:
         return out
 
     # ---- batch (Spark) mode -------------------------------------------
-    # kernels= selects the implementation behind every model seam:
-    # "rules" (v0 default) or "learned" (pinned-weight micro-models —
-    # boundary classifier, joint tagger, biaffine-style parser). Output is
-    # identical on the fixture grammar (tests/test_learned_kernel.py); the
-    # option exists so a retrained artifact swap is one argument.
-    def process(self, spark, pages_df, kernels: str = "rules"):
+    # The rules kernels behind every model seam, as in the reference's
+    # Cube. The pinned-weight learned kernels stay reachable through the
+    # operators' own scorer=/tagger=/boundary= arguments
+    # (tests/test_learned_kernel.py checks both give the same output).
+    def process(self, spark, pages_df):
         from .operators.annotate import annotate
 
-        return annotate(pages_df, scorer=kernels, tagger=kernels, boundary=kernels)
+        return annotate(pages_df)
 
-    def process_triples(self, spark, pages_df, kernels: str = "rules"):
+    def process_triples(self, spark, pages_df):
         from .operators.annotate import fused_triples
 
-        return fused_triples(pages_df, scorer=kernels, tagger=kernels, boundary=kernels)
+        return fused_triples(pages_df)

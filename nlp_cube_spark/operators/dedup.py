@@ -9,15 +9,17 @@ No Python in any hot path — every batch operator here is pure Catalyst
 Scale design:
 - exact: one hash-aggregate (partial+final) on md5(text) — the canonical
   100 TB first pass.
-- MinHash/LSH: per-doc signature is a narrow map-side projection; candidate
+- MinHash/LSH: per-doc signature is k partial-aggregated MINs over the
+  exploded shingles (hashes computed once per distinct gram); candidate
   generation is a self-equi-join on (band_id, band_sig) — shuffle keyed on
   band signatures, which are uniform by construction (no skew). Band count
   tunes recall/cost; signatures are 16 longs/doc regardless of doc size.
 - SimHash: per-token 60-bit hashes exploded and bit-counted in one
   partial aggregation per doc; near-dup blocking joins on 15-bit chunks
   (Hamming<=3 guarantees a matching chunk by pigeonhole).
-- n-gram Jaccard: exact verifier on LSH candidates (array_intersect), never
-  run all-pairs at scale.
+- n-gram Jaccard: exact verifier on LSH candidates (size-ratio prefilter,
+  then bitset AND+bit_count or int-array intersect), never run all-pairs
+  at scale.
 """
 
 from __future__ import annotations
@@ -79,39 +81,25 @@ def shingle_expr(text_col: str, n: int = 3) -> str:
 
 
 def minhash_signature(
-    docs: DataFrame, text_col: str = "text", k: int = 16, n: int = 3,
-    shingle_col: str | None = None,
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 16,
+    n: int = 3, shingle_col: str | None = None,
 ) -> DataFrame:
-    """k-permutation MinHash signature (ARRAY<BIGINT> length k).
-
-    `shingle_col` reuses a precomputed shingle array (cf.
-    jaccard_verify_pairs) instead of re-evaluating the interpreted HOF."""
-    mins = ", ".join(
-        "array_min(transform(_msh, s -> %s))" % _h60("concat('%d:', s)" % j) for j in range(k)
-    )
-    base = (
-        docs.withColumn("_msh", F.col(shingle_col))
-        if shingle_col is not None
-        else docs.withColumn("_msh", F.expr(shingle_expr(text_col, n)))
-    )
-    return base.withColumn("minhash", F.expr(f"array({mins})")).drop("_msh")
-
-
-def _minhash_agg(
-    docs: DataFrame, id_col: str, text_col: str, k: int, n: int,
-    shingle_col: str | None = None,
-) -> DataFrame:
-    """(id, minhash ARRAY<BIGINT> length k) — bit-identical to
-    minhash_signature, fully codegen'd: explode the shingle set, compute
+    """(id, minhash ARRAY<BIGINT> length k): k-permutation MinHash over
+    the shingle set, fully codegen'd. Explode the shingle set, compute
     the k salted md5 hashes per shingle inside WholeStageCodegen, reduce
     with k partial-aggregated MINs keyed on the doc id (one k-long row
-    per doc crosses the shuffle — guide §2.3/§4.1). The HOF form pays k
-    interpreted transform passes (k x |shingles| lambda evals) per doc;
-    this was the dominant cost of the LSH stage in training_data_prep
-    (r8 measurement). min() over the exploded (non-distinct-safe) rows
-    equals array_min over the distinct set — duplicates cannot change a
-    minimum — and NULL/empty shingle arrays yield the same all-NULL
-    signature via explode_outer + min's NULL-skipping.
+    per doc crosses the shuffle — guide §2.3/§4.1). An interpreted
+    `array_min(transform(...))` form pays k x |shingles| lambda evals
+    per doc; that was the dominant cost of the LSH stage in
+    training_data_prep (r8 measurement). min() over the exploded
+    (non-distinct-safe) rows equals array_min over the distinct set —
+    duplicates cannot change a minimum — and a NULL/empty shingle array
+    yields the all-NULL signature via explode_outer + min's NULL-skipping.
+    The DuckDB oracle (`__spark_entry__._minhash_duck`) replays it as
+    list_min over the shingle list.
+
+    `shingle_col` reuses a precomputed shingle array (cf.
+    jaccard_verify_pairs) instead of re-running the shingle regex.
 
     Second lever: the k salted md5 hashes are computed once per DISTINCT
     gram (the gram vocabulary is a bounded dimension — ~charset^n — while
@@ -128,7 +116,7 @@ def _minhash_agg(
     )
     # left join: the explode_outer NULL row of an empty/NULL shingle array
     # must survive with all-NULL hashes so the doc keeps its all-NULL
-    # signature (matches array_min over an empty transform)
+    # signature
     joined = ex.join(F.broadcast(hdict), "_s", "left")
     mins = [F.min(f"_h{j}").alias(f"_m{j}") for j in range(k)]
     return joined.groupBy(id_col).agg(*mins).select(
@@ -136,20 +124,21 @@ def _minhash_agg(
     )
 
 
-def _band_rows(sig: DataFrame, id_col: str, k: int, bands: int) -> DataFrame:
-    """(id, band_id, band_sig) from a (id, minhash ARRAY<BIGINT>) frame —
-    THE one definition of band-signature assembly (shared with the fused
-    plans/dataprep path so the two can never silently diverge)."""
+def _band_rows(sig: DataFrame, k: int, bands: int) -> DataFrame:
+    """Every column of a frame carrying `minhash ARRAY<BIGINT>` plus
+    (band_id, band_sig), one row per band — THE one definition of
+    band-signature assembly: batch LSH, the fused plans/dataprep path and
+    the streaming dedup store all band through it."""
     rows_per_band = k // bands
     return sig.select(
-        id_col,
+        "*",
         F.explode(
             F.expr(
                 f"transform(sequence(0, {bands - 1}), b -> struct(b as band_id,"
                 f" md5(array_join(slice(minhash, b * {rows_per_band} + 1, {rows_per_band}), '_')) as band_sig))"
             )
         ).alias("band"),
-    ).select(id_col, "band.band_id", "band.band_sig")
+    ).select(*sig.columns, "band.band_id", "band.band_sig")
 
 
 def _candidate_pairs_from_banded(
@@ -177,9 +166,8 @@ def _banded_signatures(
     docs: DataFrame, id_col: str, text_col: str, k: int, bands: int, n: int,
     shingle_col: str | None = None,
 ) -> DataFrame:
-    """(id, band_id, band_sig) — one row per doc per band."""
-    sig = _minhash_agg(docs, id_col, text_col, k, n, shingle_col)
-    return _band_rows(sig, id_col, k, bands)
+    """(id, minhash, band_id, band_sig) — one row per doc per band."""
+    return _band_rows(minhash_signature(docs, id_col, text_col, k, n, shingle_col), k, bands)
 
 
 def lsh_candidate_pairs(
@@ -219,6 +207,51 @@ def oversized_band_buckets(
     )
 
 
+def _size_bound() -> F.Column:
+    """round(min(|A|,|B|) / max(|A|,|B|), 6) over the `_sza`/`_szb` set
+    sizes — the Jaccard upper bound (the intersection is bounded by the
+    smaller set, the union by the larger). round() is monotone
+    non-decreasing, so `_size_bound() >= threshold` drops no pair whose
+    round(jaccard, 6) passes. Two empty sets give NULL, which no
+    threshold passes."""
+    return F.round(
+        F.least("_sza", "_szb")
+        / F.nullif(F.greatest("_sza", "_szb").cast("double"), F.lit(0.0)),
+        6,
+    )
+
+
+def _bitset_words(nwords: int) -> list[F.Column]:
+    """Partial-aggregatable bit_or aggregates packing dense gram ids
+    `_gid` into `nwords` BIGINT words `_w0.._w{nwords-1}` per group."""
+    return [
+        F.expr(
+            f"bit_or(case when _gid div 64 = {w}"
+            f" then shiftleft(1L, cast(_gid % 64 as int)) else 0L end)"
+        ).alias(f"_w{w}")
+        for w in range(nwords)
+    ]
+
+
+def _bitset_side(enc: DataFrame, id_col: str, side: str, nwords: int, *cols: F.Column) -> DataFrame:
+    """One pair side of a `_bitset_words` encoding: the id as `doc_{side}`
+    and word `_w{w}` as `_{side}w{w}`, plus `cols`."""
+    return enc.select(
+        F.col(id_col).alias(f"doc_{side}"), *cols,
+        *[F.col(f"_w{w}").alias(f"_{side}w{w}") for w in range(nwords)],
+    )
+
+
+def _bitset_intersection(nwords: int) -> F.Column:
+    """|A ∩ B| of two `_bitset_side` encodings: AND + bit_count per word."""
+    return F.expr(" + ".join(f"bit_count(_aw{w} & _bw{w})" for w in range(nwords)))
+
+
+def _jaccard(inter: F.Column) -> F.Column:
+    """round(|A ∩ B| / |A ∪ B|, 6) with |A ∪ B| = `_sza` + `_szb` - |A ∩ B|."""
+    return F.round(inter / (F.col("_sza") + F.col("_szb") - inter), 6)
+
+
 def jaccard_verify_pairs(
     pairs: DataFrame, docs: DataFrame, id_col: str = "doc_id",
     text_col: str = "text", n: int = 3, threshold: float = 0.5,
@@ -229,54 +262,32 @@ def jaccard_verify_pairs(
     This is the scale shape: cost is O(|pairs|), never all-pairs — feed it
     `lsh_candidate_pairs` (or `simhash_near_dups`) output. Shingle sets are
     joined onto both pair sides by id (two shuffles keyed on doc id, which
-    is uniform); the Jaccard math is pure Catalyst array expressions.
+    is uniform); the Jaccard math is pure Catalyst expressions.
 
     `shingle_col` names a PRECOMPUTED array<string> column in `docs`: the
-    shingle expression is an interpreted HOF evaluated per doc per side,
-    so callers that materialize docs anyway (plans/dataprep) should
-    compute shingles once into the materialized set and pass the column.
+    shingle regex otherwise runs per doc per side, so callers that
+    materialize docs anyway (plans/dataprep) should compute shingles once
+    into the materialized set and pass the column.
 
     Size-bound prefilter (guide §8 "decide with small rows, move big rows
-    once"): Jaccard can never exceed min(|A|,|B|)/max(|A|,|B|) (the
-    intersection is bounded by the smaller set, the union by the larger),
-    so pairs whose SIZE ratio already fails the threshold are dropped
-    using two narrow integer joins before the shingle ARRAYS are ever
-    shuffled per pair. round() is monotone non-decreasing, so comparing
-    round(bound, 6) >= threshold mirrors the final round(jaccard, 6) >=
-    threshold predicate exactly — no pair the full verify would keep can
-    be dropped. Measured at sf1.0: 320k candidate pairs -> array attach
-    only for the surviving fraction."""
+    once"): pairs whose `_size_bound` already fails the threshold are
+    dropped using two narrow integer joins before the encoded sets are
+    ever shuffled per pair. Measured at sf1.0: 320k candidate pairs ->
+    set attach only for the surviving fraction. The same path serves
+    every threshold; a pair with a NULL or empty set never verifies."""
     if shingle_col is not None:
         sh = docs.select(F.col(id_col), F.col(shingle_col).alias("_sh"))
     else:
         sh = docs.select(F.col(id_col), F.expr(shingle_expr(text_col, n)).alias("_sh"))
-    if threshold <= 0:
-        a = sh.select(F.col(id_col).alias("doc_a"), F.col("_sh").alias("sh_a"))
-        b = sh.select(F.col(id_col).alias("doc_b"), F.col("_sh").alias("sh_b"))
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        union = F.size("sh_a") + F.size("sh_b") - inter
-        return (
-            pairs.select("doc_a", "doc_b")
-            .join(a, "doc_a")
-            .join(b, "doc_b")
-            .withColumn("jaccard", F.round(inter / union, 6))
-            .where(F.col("jaccard") >= threshold)
-            .select("doc_a", "doc_b", "jaccard")
-        )
 
     # size-ratio prefilter; the sizes ride along so union never needs the
     # encoded sets' width later (|A ∪ B| = |A| + |B| - |A ∩ B|)
     sizes = sh.select(F.col(id_col), F.size("_sh").alias("_sz"))
-    bound = F.round(
-        F.least("_sza", "_szb")
-        / F.nullif(F.greatest("_sza", "_szb").cast("double"), F.lit(0.0)),
-        6,
-    )
     cand = (
         pairs.select("doc_a", "doc_b")
         .join(sizes.select(F.col(id_col).alias("doc_a"), F.col("_sz").alias("_sza")), "doc_a")
         .join(sizes.select(F.col(id_col).alias("doc_b"), F.col("_sz").alias("_szb")), "doc_b")
-        .where(bound >= threshold)
+        .where(_size_bound() >= threshold)
     )
 
     # |A ∩ B| is invariant under ANY injective gram -> id map, so the
@@ -304,23 +315,12 @@ def jaccard_verify_pairs(
         dct = exclusive_prefix_sum(vocab, [F.col("_s")], F.lit(1), out_col="_gid")
         ids = grams.join(F.broadcast(dct), "_s").select(F.col(id_col), "_gid")
         nwords = max(1, (n_vocab + 63) // 64)
-        bit_aggs = [
-            F.expr(
-                f"bit_or(case when _gid div 64 = {w}"
-                f" then shiftleft(1L, cast(_gid % 64 as int)) else 0L end)"
-            ).alias(f"_w{w}")
-            for w in range(nwords)
-        ]
         # eager checkpoint: feeds BOTH pair sides (Spark does not dedupe
         # identical subtrees across join branches — CLAUDE.md)
-        enc = ids.groupBy(id_col).agg(*bit_aggs).localCheckpoint()
-        a = enc.select(
-            F.col(id_col).alias("doc_a"), *[F.col(f"_w{w}").alias(f"_aw{w}") for w in range(nwords)]
-        )
-        b = enc.select(
-            F.col(id_col).alias("doc_b"), *[F.col(f"_w{w}").alias(f"_bw{w}") for w in range(nwords)]
-        )
-        inter = F.expr(" + ".join(f"bit_count(_aw{w} & _bw{w})" for w in range(nwords)))
+        enc = ids.groupBy(id_col).agg(*_bitset_words(nwords)).localCheckpoint()
+        a = _bitset_side(enc, id_col, "a", nwords)
+        b = _bitset_side(enc, id_col, "b", nwords)
+        inter = _bitset_intersection(nwords)
     else:
         chk = vocab.agg(F.countDistinct(F.xxhash64("_s")).alias("nh")).collect()[0]
         if n_vocab == chk["nh"]:
@@ -334,11 +334,10 @@ def jaccard_verify_pairs(
         a = enc.select(F.col(id_col).alias("doc_a"), F.col("_shi").alias("sh_a"))
         b = enc.select(F.col(id_col).alias("doc_b"), F.col("_shi").alias("sh_b"))
         inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.col("_sza") + F.col("_szb") - inter
     return (
         cand.join(a, "doc_a")
         .join(b, "doc_b")
-        .withColumn("jaccard", F.round(inter / union, 6))
+        .withColumn("jaccard", _jaccard(inter))
         .where(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )

@@ -108,27 +108,18 @@ def pagerank(
         "node", (F.col("_rn").cast("double") / F.lit(1e9)).alias("rank")
     )
 
-def _directed_simple_edges(
-    edges: DataFrame, src: str, dst: str, degree_ordered: bool
-) -> DataFrame:
-    """Simple undirected edge set, each edge directed low->high under a
-    total order: plain id order (cheapest), or (degree, id) order — the
-    classic power-law refinement that pivots every triangle on its
-    lowest-DEGREE vertex so a web-scale hub never anchors O(deg^2)
-    wedges. Returns (s, t, kt) where kt is t's (deg, id) sort key struct
-    (id order carries kt too so the wedge join below is shape-identical).
+def _directed_simple_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Simple undirected edge set, each edge directed low->high under the
+    (degree, id) total order — the classic power-law refinement that
+    pivots every triangle on its lowest-DEGREE vertex so a web-scale hub
+    never anchors O(deg^2) wedges. Returns (s, t, kt) where kt is t's
+    (deg, id) sort key struct.
     """
     e0 = (
         edges.select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"))
         .where(F.col("a") != F.col("b"))
         .dropDuplicates()
     )
-    if not degree_ordered:
-        return e0.select(
-            F.col("a").alias("s"),
-            F.col("b").alias("t"),
-            F.struct(F.lit(0).alias("d"), F.col("b").alias("i")).alias("kt"),
-        )
     deg = (
         e0.select(F.explode(F.array("a", "b")).alias("node"))
         .groupBy("node")
@@ -163,9 +154,7 @@ def _wedges(d: DataFrame) -> DataFrame:
     )
 
 
-def triangle_count(
-    edges: DataFrame, src: str = "src", dst: str = "dst", degree_ordered: bool = True
-) -> DataFrame:
+def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Per-node triangle counts over the UNDIRECTED simple graph induced
     by `edges` (direction dropped, self-loops and duplicate/reversed
     edges collapsed) — GraphFrames' triangleCount semantics.
@@ -173,15 +162,13 @@ def triangle_count(
     Plan: canonical directed simple edge set -> wedge join (second
     endpoint strictly ordered, so each triangle is enumerated exactly
     once) -> closing-edge join -> explode the 3 corners -> one hash agg.
-    Two equi-joins on node keys. With `degree_ordered` (default) edges
-    are directed by (degree, id) so every triangle pivots on its
-    lowest-degree vertex: on power-law graphs a hub with degree D
-    anchors ZERO wedges instead of O(D^2) (its neighbours point AT it),
-    at the cost of one degree aggregation + two node-dimension joins —
-    the standard web-graph formulation. `degree_ordered=False` skips
-    those joins (fine for bounded-degree graphs); both orders return
-    identical counts. Returns (node, triangles) for EVERY node incident
-    to an edge. NULL-endpoint edges are dropped entirely up front
+    Two equi-joins on node keys. Edges are directed by (degree, id) so
+    every triangle pivots on its lowest-degree vertex: on power-law
+    graphs a hub with degree D anchors ZERO wedges instead of O(D^2)
+    (its neighbours point AT it), at the cost of one degree aggregation
+    + two node-dimension joins — the standard web-graph formulation.
+    Returns (node, triangles) for EVERY node incident to an edge.
+    NULL-endpoint edges are dropped entirely up front
     (least/greatest would otherwise skip the NULL and collapse such an
     edge to a self-loop while its NULL node still appeared in the
     output)."""
@@ -191,7 +178,7 @@ def triangle_count(
     edges = edges.where(F.col(src).isNotNull() & F.col(dst).isNotNull()).localCheckpoint(
         eager=False
     )
-    d = _directed_simple_edges(edges, src, dst, degree_ordered).localCheckpoint(
+    d = _directed_simple_edges(edges, src, dst).localCheckpoint(
         eager=False
     )  # referenced by the wedge join (2x) and the closing-edge join
     tri = _wedges(d).join(
@@ -330,8 +317,8 @@ class Graph:
 
         return connected_components(self.edges, max_iter=max_iter)
 
-    def triangle_count(self, degree_ordered: bool = True) -> DataFrame:
-        return triangle_count(self.edges, degree_ordered=degree_ordered)
+    def triangle_count(self) -> DataFrame:
+        return triangle_count(self.edges)
 
     def label_propagation(self, iters: int = 3) -> DataFrame:
         return label_propagation(self.edges, iters=iters)

@@ -61,7 +61,6 @@ def exact_substring_spans(
     k: int = 8,
     min_len: int = 12,
     max_docs_per_gram: int = 64,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Maximal cross-document shared token spans of >= min_len tokens.
 
@@ -75,12 +74,13 @@ def exact_substring_spans(
 
     The cap is COUNT(DISTINCT doc) per gram — constant-size agg state,
     never a per-group value buffer (a collect-the-bucket formulation
-    would buffer a hot gram's full row list in one agg key).  `shared`
-    (the surviving anchors — near-dup-volume, tiny next to the corpus)
-    is lazily localCheckpoint-ed before the self-join: Spark does not
-    dedupe identical subtrees across join branches (CLAUDE.md), so the
-    a/b sides would otherwise each re-scan the corpus and re-run the
-    gram regex.
+    would buffer a hot gram's full row list in one agg key).  Two lazy
+    localCheckpoints, always: `anchors` feeds both the keep agg and the
+    shared join, and `shared` (the surviving anchors — near-dup-volume,
+    tiny next to the corpus) feeds both self-join sides. Spark does not
+    dedupe identical subtrees across join branches (CLAUDE.md), so
+    without them each branch re-scans the corpus and re-runs the gram
+    regex + md5 hashing.
     """
     if min_len < k:
         raise ValueError(f"min_len ({min_len}) must be >= k ({k})")
@@ -91,21 +91,15 @@ def exact_substring_spans(
         )
         # hash + drop the gram string BEFORE any shuffle
         .select("_id", "pos", F.expr(_h60("gram")).alias("gh"))
+        .localCheckpoint(eager=False)
     )
-    if checkpoint:
-        # anchors feeds BOTH the keep agg and the shared join — without
-        # this the gram regex + md5 hashing run twice over the corpus
-        # (r6 ADVICE; same shared-subtree rule as `shared` below)
-        anchors = anchors.localCheckpoint(eager=False)
     keep = (
         anchors.groupBy("gh")
         .agg(F.countDistinct("_id").alias("nd"))
         .where((F.col("nd") >= 2) & (F.col("nd") <= max_docs_per_gram))
         .select("gh")
     )
-    shared = anchors.join(keep, "gh")
-    if checkpoint:
-        shared = shared.localCheckpoint(eager=False)
+    shared = anchors.join(keep, "gh").localCheckpoint(eager=False)
     a = shared.select(
         F.col("gh"), F.col("_id").alias("doc_a"), F.col("pos").alias("pa")
     )

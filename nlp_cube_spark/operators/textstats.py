@@ -104,7 +104,7 @@ def ngrams_sql(text_col: str, n: int) -> str:
     ahead, so overlapping grams fall out of a single codegen'd JVM regex
     pass. The previous transform(sequence)+slice+array_join HOF chain is
     interpreted, never codegen'd; measured at n=13 over 100k sf0.1 docs
-    (scripts/bench_ngram_paths.py): HOF 7.34s vs regex 3.09s vs
+    (r5, all three forms parity-gated): HOF 7.34s vs regex 3.09s vs
     split+posexplode+lead-window 2.80s — the window form is marginally
     fastest locally but adds a token-volume shuffle+sort per doc, which
     at 100 TB is the wrong trade; regex keeps the stage shuffle-free."""

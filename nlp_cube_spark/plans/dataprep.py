@@ -36,8 +36,13 @@ from pyspark.sql import DataFrame, Window, functions as F
 from ..operators.dedup import (
     _BITSET_MAX_VOCAB,
     _band_rows,
+    _bitset_intersection,
+    _bitset_side,
+    _bitset_words,
     _candidate_pairs_from_banded,
     _h60,
+    _jaccard,
+    _size_bound,
     jaccard_verify_pairs,
     lsh_candidate_pairs,
     shingle_expr,
@@ -58,14 +63,12 @@ def prep_training_data(
     weights: dict[str, float] | None = None,
     shard_budget: int = 20000,
     size_col: str = "n_chars",
-    materialize: bool = True,
 ) -> DataFrame:
     """documents(doc_id, text, n_chars, ...) -> (doc_id, split, shard,
     n_chars) for every surviving document. Deterministic at any
     parallelism; every stage SQL-replayable.
 
-    `materialize` inserts three barriers (localCheckpoint; persist() on a
-    real cluster):
+    Three barriers (localCheckpoint; persist() on a real cluster):
 
     1. the scored base (quality + shingles in ONE codegen'd corpus pass).
        Without it, Catalyst inlines the `quality >= min_quality` filter
@@ -75,11 +78,12 @@ def prep_training_data(
        self-join then recomputes that inflated scan for BOTH join sides
        (guide §4.4's duplication trap, built-in-expression edition).
        Filtering on the materialized column evaluates every regex and the
-       shingle HOF exactly once per document.
+       shingle pass exactly once per document.
     2. the deduped set — referenced FOUR times downstream (LSH
        signatures, both Jaccard shingle attaches, the anti-join left
        side); lazily composed, the upstream re-executes ~6x (measured
-       84s vs ~10s at sf0.1).
+       84s vs ~10s at sf0.1). On the fused path below the gram encode
+       is this barrier.
     3. the split survivors — read once per split by the shard packer
        plus its range-boundary sampling actions."""
     weights = weights or DEFAULT_WEIGHTS
@@ -105,8 +109,7 @@ def prep_training_data(
 
     spark = docs.sparkSession
     ids0 = persistent_rdd_ids(spark)
-    if materialize:
-        base = base.localCheckpoint()
+    base = base.localCheckpoint()
     kept = base.where(F.col("quality") >= min_quality).select(
         "doc_id", size_col, "_th", "_sh"
     )
@@ -128,11 +131,14 @@ def prep_training_data(
     # separate signature and encode passes each re-scanned the ~|grams|
     # rows. Every piece of pinned math is shared with the generic
     # operators (_h60 salted hashes; _band_rows / _candidate_pairs_from_
-    # banded are THE band/pair definitions; the bitmap jaccard is the
-    # dedup.py form), so the pair set and jaccard values are identical —
-    # replayed by the unchanged DuckDB oracle at two SFs.
+    # banded for bands and pairs; _bitset_words / _bitset_intersection /
+    # _size_bound / _jaccard for the verify), so the pair set and jaccard
+    # values are identical — replayed by the unchanged DuckDB oracle at
+    # two SFs. The fused path serves a positive threshold over at most
+    # _BITSET_MAX_VOCAB distinct grams (counted on the data); any other
+    # input takes the generic lsh_candidate_pairs + jaccard_verify_pairs.
     fused = False
-    if materialize and jaccard_threshold > 0:
+    if jaccard_threshold > 0:
         vocab = base.select(F.explode("_sh").alias("_s")).dropDuplicates().localCheckpoint()
         n_vocab = vocab.count()
         fused = n_vocab <= _BITSET_MAX_VOCAB
@@ -155,13 +161,7 @@ def prep_training_data(
                 F.first(size_col).alias(size_col),
                 F.count(F.lit(1)).alias("_sz"),
                 *[F.min(f"_h{j}").alias(f"_m{j}") for j in range(k)],
-                *[
-                    F.expr(
-                        f"bit_or(case when _gid div 64 = {w}"
-                        f" then shiftleft(1L, cast(_gid % 64 as int)) else 0L end)"
-                    ).alias(f"_w{w}")
-                    for w in range(nwords)
-                ],
+                *_bitset_words(nwords),
             )
             .localCheckpoint()
         )
@@ -169,34 +169,20 @@ def prep_training_data(
             "doc_id", F.array(*[F.col(f"_m{j}") for j in range(k)]).alias("minhash")
         )
         cand = _candidate_pairs_from_banded(
-            _band_rows(sig, "doc_id", k, bands), "doc_id", max_bucket
+            _band_rows(sig, k, bands), "doc_id", max_bucket
         ).select("doc_a", "doc_b")
-        a = enc.select(
-            F.col("doc_id").alias("doc_a"), F.col("_sz").alias("_sza"),
-            *[F.col(f"_w{w}").alias(f"_aw{w}") for w in range(nwords)],
-        )
-        b = enc.select(
-            F.col("doc_id").alias("doc_b"), F.col("_sz").alias("_szb"),
-            *[F.col(f"_w{w}").alias(f"_bw{w}") for w in range(nwords)],
-        )
-        bound = F.round(
-            F.least("_sza", "_szb")
-            / F.nullif(F.greatest("_sza", "_szb").cast("double"), F.lit(0.0)),
-            6,
-        )
-        inter = F.expr(" + ".join(f"bit_count(_aw{w} & _bw{w})" for w in range(nwords)))
+        inter = _bitset_intersection(nwords)
         pairs = (
-            cand.join(a, "doc_a")
-            .join(b, "doc_b")
-            .where(bound >= jaccard_threshold)
-            .withColumn("jaccard", F.round(inter / (F.col("_sza") + F.col("_szb") - inter), 6))
+            cand.join(_bitset_side(enc, "doc_id", "a", nwords, F.col("_sz").alias("_sza")), "doc_a")
+            .join(_bitset_side(enc, "doc_id", "b", nwords, F.col("_sz").alias("_szb")), "doc_b")
+            .where(_size_bound() >= jaccard_threshold)
+            .withColumn("jaccard", _jaccard(inter))
             .where(F.col("jaccard") >= jaccard_threshold)
             .select("doc_a", "doc_b", "jaccard")
         )
         kept = enc.select("doc_id", size_col)
     else:
-        if materialize:
-            kept = kept.localCheckpoint()
+        kept = kept.localCheckpoint()
         pairs = jaccard_verify_pairs(
             lsh_candidate_pairs(kept, k=k, bands=bands, max_bucket=max_bucket, shingle_col="_sh"),
             kept,
@@ -206,22 +192,20 @@ def prep_training_data(
     near_dup_ids = pairs.select(F.col("doc_b").alias("doc_id")).dropDuplicates()
     survivors = kept.join(near_dup_ids, "doc_id", "left_anti")
 
+    # the split table IS in the returned plan and is the last barrier:
+    # materializing it runs LSH+verify, after which every other barrier
+    # this call created (base, kept, the verify gram-encode) is dead —
+    # drop their blocks, keep only the split table's
     split_docs = hash_split(survivors, "doc_id", weights).drop("_sh")
-    if materialize:
-        # the split table IS in the returned plan and is the last barrier:
-        # materializing it runs LSH+verify, after which every other
-        # barrier this call created (base, kept, the verify gram-encode)
-        # is dead — drop their blocks, keep only the split table's
-        pre_split = persistent_rdd_ids(spark)
-        split_docs = split_docs.localCheckpoint()
-        split_ids = persistent_rdd_ids(spark) - pre_split
-        unpersist_rdd_ids(spark, persistent_rdd_ids(spark) - ids0 - split_ids)
-    kept = split_docs
+    pre_split = persistent_rdd_ids(spark)
+    split_docs = split_docs.localCheckpoint()
+    split_ids = persistent_rdd_ids(spark) - pre_split
+    unpersist_rdd_ids(spark, persistent_rdd_ids(spark) - ids0 - split_ids)
 
     # one-pass per-split packing: exactly the rows of a per-split
     # pack_by_budget loop (proof in pack_by_budget_grouped), one
     # prefix-sum job instead of ~3 driver actions per split
-    packed = pack_by_budget_grouped(kept, "split", size_col, shard_budget)
+    packed = pack_by_budget_grouped(split_docs, "split", size_col, shard_budget)
     return packed.select("doc_id", "split", "shard", size_col)
 
 

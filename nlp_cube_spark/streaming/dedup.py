@@ -9,7 +9,10 @@ Per micro-batch (foreachBatch):
      batch, (b) drop docs whose hash already exists in the survivor store;
   2. near: MinHash signatures (16 longs/doc — the store stays tiny no
      matter the corpus), LSH band join within the batch AND against the
-     accumulated signature store; a candidate is a duplicate when the
+     accumulated signature store. Signatures and bands are the batch
+     operators' own (`dedup.minhash_signature` keyed on url,
+     `dedup._band_rows`), so a stored band matches a batch LSH band of
+     the same text bit for bit. A candidate is a duplicate when the
      fraction of agreeing minhash positions >= `sim_threshold` (the
      standard sketch estimate of Jaccard; in-batch keep-rule: min url).
   3. survivors + their signatures append as batch_id partitions with
@@ -41,7 +44,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.dedup import minhash_signature
+from ..operators.dedup import _band_rows, minhash_signature
 
 SIG_K = 16
 BANDS = 4
@@ -50,22 +53,16 @@ _MAX_PUSHDOWN_KEYS = 1024  # literal IN filter only below this cardinality
 
 
 def _with_signature(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    sig = minhash_signature(docs, text_col, k=SIG_K)
-    return sig.withColumn("content_hash", F.md5(F.col(text_col)))
-
-
-def _bands(sig: DataFrame) -> DataFrame:
-    rows = SIG_K // BANDS
-    return sig.select(
-        "url",
-        "minhash",
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {BANDS - 1}), b -> struct(b as band_id,"
-                f" md5(array_join(slice(minhash, b * {rows} + 1, {rows}), '_')) as band_sig))"
-            )
-        ).alias("band"),
-    ).select("url", "minhash", "band.band_id", "band.band_sig")
+    """docs + (minhash, content_hash). The batch MinHash keyed on `url`,
+    joined back on it: `read_pages_stream` drops duplicate urls, so a
+    micro-batch holds each url once (a NULL url never survives the
+    min-url keep rule of `_dedup_sig` anyway)."""
+    sig = minhash_signature(docs, "url", text_col, k=SIG_K)
+    return (
+        docs.join(sig, "url")
+        .select(*docs.columns, "minhash")
+        .withColumn("content_hash", F.md5(F.col(text_col)))
+    )
 
 
 def _match_frac(a: str, b: str):
@@ -107,7 +104,7 @@ def _dedup_sig(
         )
 
     # 2. near-dup via band join + signature-agreement estimate
-    b = _bands(sig)
+    b = _band_rows(sig.select("url", "minhash"), SIG_K, BANDS)
     selfp = (
         b.alias("x")
         .join(b.alias("y"), ["band_id", "band_sig"])
@@ -119,7 +116,7 @@ def _dedup_sig(
     sig = sig.join(selfp, "url", "left_anti")
     if history_bands is not None:
         histp = (
-            _bands(sig)
+            _band_rows(sig.select("url", "minhash"), SIG_K, BANDS)
             .alias("x")
             .join(history_bands.alias("y"), ["band_id", "band_sig"])
             .where(_match_frac("x.minhash", "y.minhash") >= sim_threshold)
@@ -140,7 +137,11 @@ def dedup_batch(
     instead feeds `_dedup_sig` pre-banded, pre-pruned history."""
     sig = _with_signature(batch).localCheckpoint()
     hh = history_sigs.select("content_hash") if history_sigs is not None else None
-    hb = _bands(history_sigs.select("url", "minhash")) if history_sigs is not None else None
+    hb = (
+        _band_rows(history_sigs.select("url", "minhash"), SIG_K, BANDS)
+        if history_sigs is not None
+        else None
+    )
     return _dedup_sig(sig, hh, hb, sim_threshold)
 
 
@@ -336,7 +337,7 @@ def start_dedup_stream(
         bs.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
         sig = _with_signature(batch_df).localCheckpoint()
-        bands = _bands(sig).withColumn(
+        bands = _band_rows(sig.select("url", "minhash"), SIG_K, BANDS).withColumn(
             "sig_prefix", F.substring("band_sig", 1, PREFIX_LEN)
         ).localCheckpoint()
         sig = sig.withColumn("hash_prefix", F.substring("content_hash", 1, PREFIX_LEN))

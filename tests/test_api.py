@@ -79,14 +79,3 @@ def test_api_import_is_spark_and_oracle_free():
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out = subprocess.run([sys.executable, "-c", code], cwd=root, check=True, capture_output=True, text=True)
     assert out.stdout.strip() == "[]"
-
-
-def test_process_learned_kernels_equal(spark):
-    from nlp_cube_spark.api import Cube
-    from nlp_cube_spark.datagen import pages_df
-
-    pages = pages_df(spark, 12, seed=77).localCheckpoint()
-    cube = Cube()
-    a = cube.process_triples(spark, pages)
-    b = cube.process_triples(spark, pages, kernels="learned")
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0

@@ -127,6 +127,31 @@ def test_lsh_verify_equals_blocked_direct(spark, docs):
     assert via_lsh == direct
 
 
+@pytest.mark.parametrize("encoding", ["bitset", "int_array"])
+def test_jaccard_verify_zero_threshold_equals_all_pairs(spark, monkeypatch, encoding):
+    """At threshold 0 the one verify path (size bound, gram encoding,
+    intersection) keeps exactly the all-pairs Jaccard rows of the
+    candidate pairs, on both set encodings: docs sharing no gram verify
+    at 0.0, and NULL text never verifies."""
+    if encoding == "int_array":
+        monkeypatch.setattr(D, "_BITSET_MAX_VOCAB", 0)
+    texts = ["the quick brown fox", "the quick brown cat", "lorem ipsum dolor",
+             "", "ab", None, None, "xyz", "the quick brown fox", "ipsum"]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    ids = range(len(texts))
+    cand = [(a, b) for a in ids for b in ids if a < b and (a + b) % 3 != 0]
+    pairs = spark.createDataFrame(cand, "doc_a long, doc_b long")
+    got = {(r.doc_a, r.doc_b): r.jaccard for r in D.jaccard_verify_pairs(pairs, docs, threshold=0.0).collect()}
+    direct = {
+        (r.doc_a, r.doc_b): r.jaccard
+        for r in D.ngram_jaccard_pairs(docs, threshold=0.0, block_col=None).collect()
+    }
+    want = {p: j for p, j in direct.items() if p in set(cand)}
+    assert got == want
+    assert 0.0 in want.values() and 1.0 in want.values()
+    assert not any(5 in p or 6 in p for p in want)
+
+
 def test_lsh_hot_bucket_cap(spark):
     """K identical boilerplate docs: uncapped LSH emits K*(K-1)/2 pairs
     through one band_sig; the cap suppresses the blowup and

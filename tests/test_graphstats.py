@@ -117,10 +117,11 @@ def test_triangle_count_no_cartesian(spark):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
 
-def test_triangle_degree_order_equals_id_order(spark):
-    """The degree-pivot refinement is a pure plan change: per-node counts
-    are identical under both edge orders on a graph with shared corners,
-    hubs, and degree ties."""
+def test_triangle_count_equals_brute_force(spark):
+    """The (degree, id)-pivoted wedge plan counts exactly the triangles a
+    brute-force enumeration of every node triple finds, on a random graph
+    with shared corners, hubs, and degree ties."""
+    import itertools
     import random
 
     from nlp_cube_spark.operators.graphstats import triangle_count
@@ -129,16 +130,21 @@ def test_triangle_degree_order_equals_id_order(spark):
     nodes = [f"n{i:02d}" for i in range(18)]
     pairs = {tuple(sorted(rng.sample(nodes, 2))) for _ in range(60)}
     edges = spark.createDataFrame(sorted(pairs), "src string, dst string")
-    a = {r.node: r.triangles for r in triangle_count(edges, degree_ordered=True).collect()}
-    b = {r.node: r.triangles for r in triangle_count(edges, degree_ordered=False).collect()}
-    assert a == b and sum(a.values()) % 3 == 0 and sum(a.values()) > 0
+    got = {r.node: r.triangles for r in triangle_count(edges).collect()}
+
+    want = {u: 0 for p in pairs for u in p}
+    for x, y, z in itertools.combinations(sorted(want), 3):
+        if {(x, y), (x, z), (y, z)} <= pairs:
+            for u in (x, y, z):
+                want[u] += 1
+    assert got == want and sum(want.values()) > 0
 
 
 def test_degree_pivot_star_hub_anchors_no_wedges(spark):
-    """On a star the hub has degree D; id-ordering (hub id minimal)
-    anchors C(D,2) wedges at the hub, degree-ordering anchors ZERO —
-    every edge points leaf->hub, so no node has two out-edges. This is
-    the O(deg^2) hub blowup the (degree, id) order removes."""
+    """On a star the hub has degree D; id-ordering (hub id minimal) would
+    anchor C(D,2) wedges at the hub, degree-ordering anchors ZERO — every
+    edge points leaf->hub, so no node has two out-edges. This is the
+    O(deg^2) hub blowup the (degree, id) order removes."""
     from nlp_cube_spark.operators.graphstats import (
         _directed_simple_edges,
         _wedges,
@@ -149,10 +155,9 @@ def test_degree_pivot_star_hub_anchors_no_wedges(spark):
     edges = spark.createDataFrame(
         [("hub", f"leaf{i:03d}") for i in range(n)], "src string, dst string"
     )
-    by_id = _wedges(_directed_simple_edges(edges, "src", "dst", degree_ordered=False))
-    by_deg = _wedges(_directed_simple_edges(edges, "src", "dst", degree_ordered=True))
-    assert by_id.count() == n * (n - 1) // 2
-    assert by_deg.count() == 0
+    d = _directed_simple_edges(edges, "src", "dst")
+    assert {r.t for r in d.select("t").distinct().collect()} == {"hub"}
+    assert _wedges(d).count() == 0
     got = {r.triangles for r in triangle_count(edges).collect()}
     assert got == {0}
 

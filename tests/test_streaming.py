@@ -226,6 +226,40 @@ def test_dedup_batch_in_batch_rules(spark):
     assert {r.url for r in out2.collect()} == {"d"}
 
 
+def test_stream_signatures_match_batch_lsh(spark):
+    """The streaming store's minhash, content hash and band rows are the
+    batch LSH operators' on the same url-keyed docs, degenerate text
+    included (empty, NULL, 1-2 chars, non-ASCII): a stored band must
+    match a batch band of the same text bit for bit."""
+    from nlp_cube_spark.operators import dedup as D
+    from nlp_cube_spark.streaming import dedup as SD
+
+    texts = ["", None, "a", "ab", "abc", "Zoë café naïve", "日本語のテキスト",
+             "the quick brown fox jumps over the lazy dog", "THE QUICK brown fox"]
+    docs = spark.createDataFrame(
+        [(f"u{i:02d}", t, "en") for i, t in enumerate(texts)],
+        "url string, text string, lang string",
+    )
+    sig = SD._with_signature(docs)
+    assert sig.columns == docs.columns + ["minhash", "content_hash"]
+    got = {r.url: (r.minhash, r.content_hash) for r in sig.collect()}
+    assert len(got) == len(texts)
+    assert {u: h for u, (_, h) in got.items()} == {
+        r.url: r.h for r in docs.select("url", F.md5("text").alias("h")).collect()
+    }
+
+    batch = D._banded_signatures(docs, "url", "text", SD.SIG_K, SD.BANDS, 3)
+    want_sig = {r.url: r.minhash for r in batch.select("url", "minhash").distinct().collect()}
+    assert {u: m for u, (m, _) in got.items()} == want_sig
+    # the exact band call the stream makes for its signature store
+    stream_bands = D._band_rows(sig.select("url", "minhash"), SD.SIG_K, SD.BANDS)
+    rows = lambda df: sorted(  # noqa: E731
+        (r.url, r.band_id, r.band_sig) for r in df.select("url", "band_id", "band_sig").collect()
+    )
+    assert rows(stream_bands) == rows(batch)
+    assert len(rows(batch)) == len(texts) * SD.BANDS
+
+
 def test_idle_trigger_does_not_wipe_output(spark, dirs):
     """Regression (r3): availableNow appends a state-flush EMPTY batch, and
     a partitioned overwrite of an empty DataFrame degenerates to static

@@ -25,7 +25,13 @@ Arrow/pandas-UDF kernels in `kernels/` and the iterative connected-components
 loop. No RDDs, no per-row Python UDFs.
 """
 
+from . import _zipcache
+
 __version__ = "0.1.0"
+
+# unpickling any product closure in a Python worker imports this package,
+# so the worker's later tasks skip pyspark's per-task zip re-reads
+_zipcache.install()
 
 
 def __getattr__(name):

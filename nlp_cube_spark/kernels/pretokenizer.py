@@ -44,12 +44,10 @@ def pretokenize(text: str, no_space_lang: bool = False) -> tuple[list[str], list
         toks = [ch for ch in text if ch != " "]
         spa = []
         n = len(text)
-        j = 0
         for i, ch in enumerate(text):
             if ch == " ":
                 continue
             spa.append(SPACE if i + 1 < n and text[i + 1] == " " else NO_SPACE)
-            j += 1
         # trailing position counts as no-space, matching reference get_tokens
         if spa and text.endswith(" "):
             spa[-1] = SPACE

@@ -135,9 +135,10 @@ def _row_stage(
     gets one list per name in `cols` and appends the slice's outputs to
     `out`: one list per name in `fields` (default: the schema's). Emit sees
     many rows at once so that _annotate_doc can parse all of their
-    sentences in length-grouped stacks. Each batch's frame is built from the schema's columns only — the
-    output projection — and empty batches/outputs yield nothing (an empty
-    object column cannot Arrow-convert to list<struct>)."""
+    sentences in length-grouped stacks. Each batch's frame is built from
+    the schema's columns only — the output projection — and empty
+    batches/outputs yield nothing (an empty object column cannot
+    Arrow-convert to list<struct>)."""
     names = schema.fieldNames()
     fields = fields or names
 
